@@ -38,6 +38,8 @@ PART_TYPES = np.array(["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD
 
 EPOCH_ORDERS = np.datetime64("1995-01-01", "D")
 ORDER_DAYS = int((np.datetime64("2001-08-01", "D") - EPOCH_ORDERS).astype(int))
+# events.ts is TIMESTAMP(MICROS), the unit the project's test tables
+# store, so Spark reads it as a timestamp on both
 EVENTS_T0 = np.datetime64("2024-01-01T00:00:00", "us")
 EVENTS_SPAN_US = 30 * 86_400 * 1_000_000
 

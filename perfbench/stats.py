@@ -12,8 +12,9 @@ from collections.abc import Iterable, Sequence
 
 METRIC_NAME = re.compile(r"[A-Za-z0-9_.-]+")
 
-# A query's child spans (build, plan, execute) must cover its wall time
-# up to this share; the rest is the tracer's own bookkeeping.
+# A query's child spans (build, plan, execute) must cover the wall time
+# measured around it, and a pass's query spans the pass's wall time, up
+# to this share; the rest is the tracer's own bookkeeping.
 RECONCILE_MARGIN = 0.05
 
 
@@ -72,11 +73,23 @@ def self_times(spans: Sequence[dict]) -> dict[int, float]:
     }
 
 
-def unaccounted_share(parent: dict, spans: Sequence[dict]) -> float:
-    """Share of ``parent``'s wall time that no direct child span covers."""
-    wall = parent["end"] - parent["start"]
+def unaccounted_share(parent: dict, spans: Sequence[dict], wall: float | None = None) -> float:
+    """Share of ``wall`` that ``parent``'s direct child spans leave
+    uncovered, the children clipped to the parent's interval.
+
+    ``wall`` is a duration measured outside the spans (by default the
+    parent span's own duration). Against such a clock a child span that
+    is missing, or recorded under another parent, shows as uncovered
+    time, and so does time lost between the spans.
+    """
+    if wall is None:
+        wall = parent["end"] - parent["start"]
     if wall <= 0:
         return 0.0
-    return self_times(
-        [parent] + [s for s in spans if s["parent"] == parent["id"]]
-    )[parent["id"]] / wall
+    kids = [
+        (max(s["start"], parent["start"]), min(s["end"], parent["end"]))
+        for s in spans
+        if s["parent"] == parent["id"]
+    ]
+    covered = union_length((lo, hi) for lo, hi in kids if hi > lo)
+    return max(0.0, 1.0 - covered / wall)

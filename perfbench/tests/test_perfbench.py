@@ -101,6 +101,27 @@ def test_unaccounted_share():
     assert stats.unaccounted_share(spans[0], spans) == pytest.approx(0.05)
 
 
+def test_unaccounted_share_against_outside_wall_time():
+    query = _span(0, None, 0.0, 2.0, "query")
+    build, plan = _span(1, 0, 0.0, 0.5, "build"), _span(2, 0, 0.5, 0.6, "plan")
+    execute = _span(3, 0, 0.6, 2.0, "execute")
+    # all children present, wall measured around the call a bit longer
+    assert stats.unaccounted_share(query, [query, build, plan, execute], 2.01) < 0.01
+    # a missing execute span shows against the outside clock
+    share = stats.unaccounted_share(query, [query, build, plan], 2.01)
+    assert share > stats.RECONCILE_MARGIN
+    # so does an execute span recorded under another parent
+    moved = dict(execute, parent=99)
+    assert stats.unaccounted_share(query, [query, build, plan, moved], 2.01) > stats.RECONCILE_MARGIN
+    # and a query span that itself misses part of the wall time
+    assert stats.unaccounted_share(query, [query, build, plan, execute], 2.5) == pytest.approx(0.2)
+
+
+def test_every_wrapped_layer_reports_a_share():
+    for _, _, span in tracing.LAYER_FUNCTIONS:
+        assert span + "_share" in run.PER_LAYER
+
+
 def test_parse_sql_metric():
     assert tracing.parse_sql_metric("100,000") == 100000
     assert tracing.parse_sql_metric("0.0 B") == 0
@@ -145,7 +166,9 @@ def test_frames_differ_is_order_insensitive():
 
 
 def test_datagen_is_seeded(tmp_path):
-    pq = pytest.importorskip("pyarrow.parquet")
+    pa = pytest.importorskip("pyarrow")
+    import pyarrow.parquet as pq
+
     import datagen
 
     a = datagen.generate(str(tmp_path / "a"), 5, scale=0.001)
@@ -155,6 +178,9 @@ def test_datagen_is_seeded(tmp_path):
     ev = [pq.read_table(os.path.join(d, "events.parquet")) for d in (a, b, c)]
     assert ev[0].equals(ev[1])
     assert not ev[0].equals(ev[2])
+    # ts has the unit of the project's test tables (TIMESTAMP(MICROS)),
+    # so the queries take the same read path on both
+    assert ev[0].schema.field("ts").type == pa.timestamp("us")
     # the key set is kept whatever the seed
     ids = sorted(ev[2].column("event_id").to_pylist())
     assert ids == list(range(ev[2].num_rows))

@@ -22,6 +22,7 @@ import numpy as np
 # call the trace reports, wherever the query registry calls them from.
 LAYER_FUNCTIONS = (
     ("h3ron_spark.operators.compact", "compact_dataframe", "operators.compact_dataframe"),
+    ("h3ron_spark.operators.spatial", "cells_in_rect", "operators.cells_in_rect"),
     ("h3ron_spark.graph.pagerank", "pagerank", "graph.pagerank"),
     ("h3ron_spark.raster", "raster_to_cells", "raster.raster_to_cells"),
 )
