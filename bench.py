@@ -112,9 +112,9 @@ BENCH_QUERIES = [
 ]
 
 # The reference's own route_germany benchmark (BASELINE.md row 1) on
-# its committed 312k-edge graph file — included when the reference
-# checkout is present.
-if os.path.exists("/root/reference/data/graph-germany_r7_f64.bincode.lz"):
+# its committed 312k-edge graph file — included when its input is
+# present.
+if "golden_germany_route" not in Q.unavailable():
     BENCH_QUERIES.append("golden_germany_route")
 
 # The B1-B6 baseline workloads PLUS the top-10 wall-time queries

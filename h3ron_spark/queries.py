@@ -13,6 +13,7 @@ Conventions:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -30,9 +31,13 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 REGISTRY: dict[str, dict] = {}
 
 
-def register(name: str, oracle: str | None = None):
+def register(name: str, oracle: str | None = None, requires: tuple = ()):
+    """Register ``fn`` as query ``name``. ``requires`` lists the paths
+    of external inputs the query reads; while one is missing the query
+    is reported by ``unavailable()`` instead of ``queries()``."""
+
     def deco(fn: QueryFn):
-        REGISTRY[name] = {"fn": fn, "oracle": oracle}
+        REGISTRY[name] = {"fn": fn, "oracle": oracle, "requires": requires}
         return fn
 
     return deco
@@ -1084,99 +1089,10 @@ def rel_events_rolling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------
-# Driver-verification ordering: the correctness harness checks queries
-# in registry order with a bounded budget (~50 oracled queries per
-# round, observed r1/r2). Rotate the queries that did NOT get a hard
-# driver row in CORRECTNESS_r02.json — plus everything added or
-# touched this round — to the FRONT, so every oracle gets driver
-# verification within a round or two. Queries not listed keep their
-# registration order after these (all were hash-verified green in r2).
-# ---------------------------------------------------------------------
-_DRIVER_ORDER_FIRST = [
-    # --- round 12 window: steady-state rotation, executing the
-    # scripts/rotation_plan.py proposal for r12. Composition, in
-    # policy order:
-    #   (a) oracled queries an r12 change may touch: the r12
-    #       optimization targets (VERDICT r11 "Next round") are
-    #       pipeline_corpus_curation — already IN the due cohort —
-    #       and rel_range_join, swapped into a filler slot below so a
-    #       targeted mitigation of its accepted +0.25 s regression
-    #       gets a driver row if code changes;
-    #   (b) no new oracles (registry frozen at 158/144);
-    #   (c) the full 44-entry r9 cohort — the oldest set (age 2),
-    #       due this round to hold the max-age-2 invariant
-    #       (scripts/rotation_plan.py output, registry names sorted);
-    #   (d) filler from the age-1 (r10-green) cohort up to the 50
-    #       budget: the planner's cohort-head proposal (5 ann_*
-    #       slots) plus rel_range_join in place of ann_pq_adc_topk
-    #       (same cohort, same age — see (a)).
-    # (c) the r9 cohort (44 entries, registry names sorted)
-    "dedup_editdistance_absolute",
-    "dedup_editdistance_join",
-    "dedup_embedding_cosine",
-    "dedup_semantic_ivf",
-    "dedup_substring_coverage",
-    "dedup_substring_spans",
-    "dedup_winnow_overlap",
-    "geo_cell_clusters",
-    "geo_compact_events",
-    "geo_raster_cells",
-    "geo_wkt_polyfill",
-    "golden_aligned_dissolve",
-    "golden_bounding_rect",
-    "golden_covered_area",
-    "golden_differential_route",
-    "golden_disk_checksums",
-    "golden_edge_metrics",
-    "golden_raster_file",
-    "golden_res0_cells",
-    "golden_route_selfloop",
-    "h3_direction_lookup",
-    "h3_localij_roundtrip",
-    "h3_string_roundtrip",
-    "mm_fake_features",
-    "mm_frame_sample",
-    "pipeline_corpus_curation",
-    "pipeline_curated_sink",
-    "rel_event_anomalies",
-    "rel_event_funnel",
-    "rel_events_asof",
-    "rel_events_rolling_window",
-    "rel_pricing_cube",
-    "rel_supplier_part_pricing",
-    "stream_windowed_counts",
-    "text_bigram_logprob",
-    "text_chunk_documents",
-    "text_length_quantiles",
-    "text_quality_classifier",
-    "text_redact_pii",
-    "text_repetition_filter",
-    "text_source_divergence",
-    "text_tfidf_keywords",
-    "text_vocab_topk",
-    "text_winnow_fingerprint",
-    # (d) filler from the age-1 cohort (5 cohort-head slots + the
-    # swapped rel_range_join — see (a))
-    "ann_blocked_exact_topk",
-    "ann_ivf_sampled_topk",
-    "ann_ivf_trained_topk",
-    "ann_ivfpq_rerank",
-    "ann_ivfpq_topk",
-    "rel_range_join",
-]
-
-
-
-def _ordered_names() -> list[str]:
-    rank = {n: i for i, n in enumerate(_DRIVER_ORDER_FIRST)}
-    # stable sort: unlisted names keep registration order
-    return sorted(REGISTRY, key=lambda n: rank.get(n, len(rank)))
-
-
 def queries() -> dict[str, QueryFn]:
-    _load_extra()
-    return {name: REGISTRY[name]["fn"] for name in _ordered_names()}
+    """Every available query, in registration order."""
+    missing = unavailable()
+    return {name: e["fn"] for name, e in REGISTRY.items() if name not in missing}
 
 
 def _load_extra() -> None:
@@ -1187,9 +1103,22 @@ def _load_extra() -> None:
 
 
 def oracles() -> dict[str, str]:
-    _load_extra()
+    missing = unavailable()
     return {
-        name: REGISTRY[name]["oracle"]
-        for name in _ordered_names()
-        if REGISTRY[name]["oracle"] is not None
+        name: e["oracle"]
+        for name, e in REGISTRY.items()
+        if e["oracle"] is not None and name not in missing
     }
+
+
+def unavailable() -> dict[str, str]:
+    """{name: reason} for each registered query left out of
+    ``queries()`` and ``oracles()`` because an input it requires is
+    missing."""
+    _load_extra()
+    out = {}
+    for name, e in REGISTRY.items():
+        missing = [p for p in e["requires"] if not os.path.exists(p)]
+        if missing:
+            out[name] = "required input not found: " + ", ".join(missing)
+    return out

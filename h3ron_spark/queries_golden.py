@@ -19,7 +19,7 @@ import h3ron_spark.h3core as h3c
 from h3ron_spark.functions import bits as B
 from h3ron_spark.functions import geo as G
 from h3ron_spark.queries import register
-from h3ron_spark.util import local_df
+from h3ron_spark.util import local_df, session_stage
 
 # The reference's canonical test cell (San Francisco, res 9) — used by
 # nearly every h3ron unit test (h3ron/src/cell.rs:485-707).
@@ -720,7 +720,6 @@ def golden_osm_pbf_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------
 
 _GERMANY_GRAPH = "/root/reference/data/graph-germany_r7_f64.bincode.lz"
-_PREPARED_GRAPH_CACHE: dict = {}
 
 _GERMANY_ORACLE = """
   SELECT * FROM (VALUES
@@ -731,7 +730,9 @@ _GERMANY_ORACLE = """
 """
 
 
-@register("golden_germany_route", oracle=_GERMANY_ORACLE)
+@register(
+    "golden_germany_route", oracle=_GERMANY_ORACLE, requires=(_GERMANY_GRAPH,)
+)
 def golden_germany_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's route_germany benchmark (route_germany.rs:27-57)
     end-to-end on the reference's own committed graph file: decode
@@ -748,17 +749,15 @@ def golden_germany_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         shortest_path_many_to_many,
     )
     from h3ron_spark.h3core import index as ix
-    from h3ron_spark.queries_h3 import _session_key
     from h3ron_spark.sources.refgraph import reference_graph_to_edges
 
     edges = reference_graph_to_edges(spark, _GERMANY_GRAPH)
     # prepared-graph reuse across calls IS the reference bench's shape
     # (route_germany.rs:58-83 routes on one loaded PreparedH3EdgeGraph)
-    pkey = (_session_key(spark), _GERMANY_GRAPH)
-    prepared = _PREPARED_GRAPH_CACHE.get(pkey)
-    if prepared is None:
-        prepared = prepare_routing_graph(edges)
-        _PREPARED_GRAPH_CACHE[pkey] = prepared
+    prepared = session_stage(
+        spark, ("prepared_graph", _GERMANY_GRAPH),
+        lambda: prepare_routing_graph(edges),
+    )
     origin = ix.latlng_to_cell(
         math.radians(47.68708804564653), math.radians(9.834909439086914), 7
     )

@@ -49,15 +49,13 @@ def get_spark(
         # stages parallel; big shuffles are unaffected (their
         # total/parallelism quotient dominates the floor at any size
         # that matters, locally or on a 100 TB cluster).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
-        # the driver's events.parquet stores TIMESTAMP(NANOS); read as long
+        # the test tables store events.ts as TIMESTAMP(MICROS); this
+        # keeps TIMESTAMP(NANOS) inputs from outside readable (as long)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
@@ -84,10 +82,7 @@ def get_spark(
         # A/B). Executors keep per-process caches governed by the
         # same conf, so the fix is cluster-side too. ~1-2k units x
         # O(10 KB) of class metadata is noise next to the 8 g heap.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", "4000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

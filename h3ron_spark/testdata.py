@@ -33,8 +33,9 @@ TABLES = (
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
-        # events.parquet stores TIMESTAMP(NANOS), which Spark rejects
-        # unless nanos are read back as long (epoch nanoseconds).
+        # the test tables store TIMESTAMP(MICROS); a TIMESTAMP(NANOS)
+        # file from outside is rejected by Spark unless nanos are read
+        # back as long (epoch nanoseconds, see event_epoch_sec).
         try:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:

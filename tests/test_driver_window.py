@@ -1,50 +1,11 @@
-"""CI pins for the driver-verification window policy.
-
-The correctness driver verifies the first ~50 oracled queries in
-registry order each round (observed budget, CORRECTNESS_r02-r04 are
-exactly 50 rows). `_DRIVER_ORDER_FIRST` is the declared window; these
-tests make the policy's structural invariants fail loudly instead of
-silently burning verification budget:
-
-- exactly 50 entries (the budget — more would push declared entries
-  out of the round's verification; fewer wastes slots);
-- no duplicates (a dupe burns a slot without adding a row);
-- every entry registered AND oracled (a rows-only or unknown name in
-  the window displaces an exact-oracle row);
-- `queries()` actually orders the window first (the driver consumes
-  registry order — if ordering breaks, the rotation plan is fiction).
-"""
+"""Fixture pins for the near-duplicate and PII workloads: non-empty
+floors at every shipped scale and the cross-engine Zipf key recipe."""
 
 from __future__ import annotations
 
+import pytest
+
 from h3ron_spark import queries as Q
-
-WINDOW_BUDGET = 50
-
-
-def test_window_is_exactly_the_budget():
-    assert len(Q._DRIVER_ORDER_FIRST) == WINDOW_BUDGET
-
-
-def test_window_has_no_duplicates():
-    w = Q._DRIVER_ORDER_FIRST
-    dupes = {n for n in w if w.count(n) > 1}
-    assert not dupes, dupes
-
-
-def test_window_entries_registered_and_oracled():
-    oracles = Q.oracles()
-    registry = Q.queries()
-    missing = [n for n in Q._DRIVER_ORDER_FIRST if n not in registry]
-    assert not missing, f"window names not registered: {missing}"
-    unoracled = [n for n in Q._DRIVER_ORDER_FIRST if n not in oracles]
-    assert not unoracled, f"window names without oracle: {unoracled}"
-
-
-def test_registry_order_leads_with_the_window():
-    ordered = list(Q.queries())
-    assert ordered[:WINDOW_BUDGET] == list(Q._DRIVER_ORDER_FIRST)
-
 
 # ---------------------------------------------------------------------
 # Fixture non-degeneracy gate (VERDICT r6 #2): the hash-compare
@@ -61,8 +22,6 @@ def test_registry_order_leads_with_the_window():
 # redact_pii 500/500/5000) — loose enough for benign drift, tight
 # enough that "the join found nothing" can never pass.
 # ---------------------------------------------------------------------
-
-import pytest  # noqa: E402
 
 _MIN_ROWS = {
     "geo_trajectory_similarity": {
@@ -141,84 +100,3 @@ def test_zipf_key_expr_pinned_cross_engine(spark):
     # every key is exactly 40 chars (the gram window and the twin
     # mutation offsets depend on it)
     assert all(len(s) == 40 for s in got.values())
-
-
-def test_rotation_plan_invariants():
-    """scripts/rotation_plan.py mechanizes the hand-rotated window
-    policy (it caught a wrong hand-derived r11 cohort in r10 — see
-    NOTES_r10). Pin the round-independent invariants: every oracle is
-    tracked or flagged, ages partition the oracle set, the due cohort
-    is exactly the age-MAX set, and a non-overflowing proposal is a
-    valid next window (<= budget, deduped, oracled, due-covering).
-
-    Phase semantics (ADVICE r10): plan() detects whether the
-    installed window has ALREADY run (its key set is contained in the
-    newest CORRECTNESS artifact — the post-round worktree state) and
-    plans from that round instead of a fictitious next one, so this
-    test is meaningful and green at BOTH round phases — before the
-    fix it went red between the driver's snapshot commit and the next
-    round's rotation commit (the r8 cohort read a bogus age 3)."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    import rotation_plan as RP
-
-    p = RP.plan(repo=repo)
-    oracles = set(Q.oracles())
-    hist = p["age_histogram_after_this_round"]
-    assert sum(hist.values()) + len(p["untracked_oracles"]) == len(oracles)
-    # the current window itself is age 0 after this round
-    assert hist.get(0, 0) >= len(Q._DRIVER_ORDER_FIRST) - len(
-        p["untracked_oracles"]
-    )
-    # max-age-2: nothing may be OLDER than the due age already
-    assert max(hist) <= RP.MAX_AGE, (
-        "an oracle is already past max age — the rotation fell behind"
-    )
-    w = p["proposed_next_window"]
-    assert len(w) <= RP.BUDGET
-    assert len(set(w)) == len(w)
-    assert all(n in oracles for n in w)
-    if not p["overflow"]:
-        assert set(p["due_next_round"]) <= set(w), (
-            "proposal drops a due entry without declaring overflow"
-        )
-
-
-def test_rotation_plan_phase_detection(tmp_path, monkeypatch):
-    """plan() must treat the installed window as already-run when the
-    newest CORRECTNESS artifact contains its whole key set (post-round
-    worktree: snapshot committed, rotation not yet), and as the
-    upcoming round's window otherwise (normal mid-round state). The
-    r10 post-round worktree hit the un-detected case: the window was
-    double-counted as r11's run and the r8 cohort computed age 3."""
-    import json
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    import rotation_plan as RP
-
-    window = list(Q._DRIVER_ORDER_FIRST)
-    others = [n for n in Q.oracles() if n not in window]
-
-    # phase A: newest artifact IS the installed window's own run
-    row = {"rows_match": True}
-    with open(tmp_path / "CORRECTNESS_r05.json", "w") as f:
-        json.dump({n: row for n in window}, f)
-    p = RP.plan(repo=str(tmp_path))
-    assert p["this_round"] == 5
-    assert p["next_round"] == 6
-    # the window ages from its own recorded round: nothing at age > 0
-    assert set(p["age_histogram_after_this_round"]) == {0}
-
-    # phase B: a newer artifact covers a DIFFERENT set -> the
-    # installed window is the upcoming round's
-    with open(tmp_path / "CORRECTNESS_r06.json", "w") as f:
-        json.dump({n: row for n in others[:10]}, f)
-    p = RP.plan(repo=str(tmp_path))
-    assert p["this_round"] == 7
-    assert p["next_round"] == 8

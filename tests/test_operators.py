@@ -618,22 +618,6 @@ def test_partitioned_compaction_preserves_layout(spark, tmp_path):
     assert "PartitionFilters" in plan
 
 
-def test_driver_window_integrity():
-    """Meta-pin for the hand-rotated driver window: exactly 50
-    entries, no duplicates, every name registered, and every entry
-    oracled (the window exists to give oracles driver rows)."""
-    from h3ron_spark import queries as Q
-
-    win = Q._DRIVER_ORDER_FIRST
-    assert len(win) == 50
-    assert len(set(win)) == 50
-    reg = Q.queries()
-    oracles = Q.oracles()
-    for name in win:
-        assert name in reg, name
-        assert name in oracles, name
-
-
 def test_bench_queries_all_registered():
     import bench
 

@@ -1000,8 +1000,8 @@ def test_stream_rollup_ignores_uncommitted_versions(spark, tmp_path):
 
 
 def test_stream_queries_thread_safe_under_parallel_replay(spark):
-    """ADVICE r8/r9: scripts/preflight_window.py --parallel replays
-    registry queries from concurrent threads. Two stream_* queries
+    """ADVICE r8/r9: registry queries may run from concurrent threads
+    on one session. Two stream_* queries
     must not (a) leak their shuffle-partitions pin to any other query
     (each streaming run now executes on a PRIVATE cloned session —
     queries_h3._stream_session — so the caller's session conf is

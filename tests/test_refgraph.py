@@ -123,6 +123,7 @@ def test_route_germany_pinned(spark):
     assert got == {emden: (1160.0, 363), stralsund: (1330.0, 421)}
 
 
+@needs_ref
 def test_route_germany_contracted_matches_pinned(spark):
     """LongEdge contraction on the real 312k-edge graph: same pinned
     costs and identical fully-expanded path lengths as the
