@@ -16,6 +16,10 @@ import os
 import pyarrow as pa
 from pyspark.sql import SparkSession
 
+# The module every executor's Python-worker daemon runs; the test
+# suite's session fixture sets it too, so the tests run this worker path.
+PYTHON_DAEMON_MODULE = "h3ron_spark.worker_daemon"
+
 
 def get_spark(
     app_name: str = "h3ron_spark",
@@ -83,6 +87,19 @@ def get_spark(
         # same conf, so the fix is cluster-side too. ~1-2k units x
         # O(10 KB) of class metadata is noise next to the 8 g heap.
         .config("spark.sql.codegen.cache.maxEntries", "4000")
+        # PySpark calls importlib.invalidate_caches() at the start of
+        # every Python task, and on CPython <= 3.12 that re-parses the
+        # whole directory of pyspark.zip (1,328 entries) once per
+        # zipimporter, 14-16 of them: 77-126 ms of fixed cost per UDF
+        # task (a 1-partition 10-row h3_latlng_to_cell query took
+        # 250-310 ms, the same plan without the UDF 40-90 ms; 130 ms
+        # with this daemon, local[2] on 4 vCPUs, CPython 3.11). The
+        # daemon re-reads a zip only when it changed, and builds the
+        # h3core tables once for every worker it forks (~1 s per fresh
+        # worker otherwise).
+        # Executors must be able to import h3ron_spark, which UDFs
+        # pickled by reference already require.
+        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -92,11 +109,10 @@ def get_spark(
 
 
 def warm_python_workers(spark: SparkSession) -> None:
-    """Pre-fork the Python UDF worker pool (one tiny Arrow-UDF task per
-    core) so the first real kernel stage doesn't pay worker fork +
-    module import. On a long-lived cluster the pool amortizes to zero;
-    locally it is a fixed ~3 s session-setup cost that would otherwise
-    land on whichever query runs first."""
+    """Start the Python-worker daemon and fork one worker per task slot
+    (one identity Arrow-UDF task each) during session set-up, so the
+    first real kernel stage doesn't pay for them. The workers inherit
+    the h3core tables from the daemon (``worker_daemon``)."""
     try:
         from pyspark.sql import functions as F
         from pyspark.sql.functions import arrow_udf
@@ -104,12 +120,6 @@ def warm_python_workers(spark: SparkSession) -> None:
 
         @arrow_udf(LongType())
         def _touch(x: pa.Array) -> pa.Array:
-            from h3ron_spark.h3core import derive
-            from h3ron_spark.h3core import vectorized
-
-            derive.precompute()
-            vectorized._luts()
-            vectorized._decode_tables()
             return x
 
         par = spark.sparkContext.defaultParallelism

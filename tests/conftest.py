@@ -3,6 +3,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import SparkSession
 
+from h3ron_spark.session import PYTHON_DAEMON_MODULE
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -15,6 +17,7 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
         .getOrCreate()
     )
     yield s
