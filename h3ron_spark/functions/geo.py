@@ -150,13 +150,6 @@ def h3_cell_to_lng(cell: pa.Array) -> pa.Array:
     return pa.array(ln, _F64, mask=~ok)
 
 
-@lru_cache(maxsize=_CACHE)
-def _boundary(cell):
-    if cell is None or not h3c.is_valid_cell(cell):
-        return None
-    return h3c.cell_to_boundary(cell)
-
-
 def _boundary_batch(cell: pa.Array):
     """Per-row boundary lists via the numpy batch kernel (S3 canonical
     path; pentagons fall back to the scalar kernel inside)."""

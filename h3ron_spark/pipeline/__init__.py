@@ -13,7 +13,7 @@ localCheckpoint stores blocks in executor storage WITHOUT the lineage
 fallback, so a decommissioned executor loses them (Spark documents it
 as unsafe with dynamic allocation). On clusters that decommission
 executors mid-query, swap these sites to ``persist()`` +
-job-scoped unpersist (the idiom ``minhash_dedup_pairs`` carries):
+job-scoped unpersist (the idiom ``dedup.document_features`` carries):
 same plan shape and scan count, recoverable blocks, at the cost of
 keeping the lineage around. The checkpointed frames are always
 metadata-sized (sketches, histograms, band keys — never corpus text),

@@ -13,7 +13,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from h3ron_spark.pipeline.text import fingerprint, with_tokens
+from h3ron_spark.pipeline.text import (
+    fingerprint,
+    token_count,
+    top_token_fraction,
+    with_tokens,
+)
 
 # MinHash parameters shared with the oracle SQL generator.
 MINHASH_PERMS = 16
@@ -139,51 +144,45 @@ def lsh_band_keys(sig: Column, bands: int = LSH_BANDS) -> Column:
     return F.array(*keys)
 
 
-def doc_shingles_df(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
+def document_features(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Per-document distinct shingle sets: (id, sh array<string>).
+    """Per-document features, derived in ONE pass over ``docs`` and
+    persisted: ``id``, every other non-text column passed through,
+    ``h`` (md5 of the raw text), ``n`` (token count), ``top_tok``
+    (:func:`text.top_token_fraction`) and ``sh`` (the distinct
+    word-trigram shingles ``array_distinct(shingles(text, 3))``).
 
-    Materializing (persisting) this once lets the signature stage AND
-    the Jaccard refine share one tokenize/shingle pass instead of
-    re-deriving shingles from raw text per consumer (or per candidate
-    pair)."""
-    return df.select(
+    The one input of the signature, near-dup, Jaccard and
+    decontamination operators: Catalyst does not CSE plan subtrees,
+    so a corpus frame that each consumer re-derived from raw text was
+    scanned and tokenized once per consumer. Job-scoped: the caller
+    may ``unpersist()`` the frame when its last consumer has run."""
+    rest = [c for c in docs.columns if c not in (text_col, id_col)]
+    return docs.select(
         F.col(id_col).alias("id"),
-        F.array_distinct(shingles(text_col, n)).alias("sh"),
-    )
+        *rest,
+        F.md5(F.col(text_col)).alias("h"),
+        token_count(text_col).alias("n"),
+        top_token_fraction(text_col).alias("top_tok"),
+        F.array_distinct(shingles(text_col, 3)).alias("sh"),
+    ).persist()
 
 
-def minhash_signature_df(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perms: int = MINHASH_PERMS,
-    doc_sh: DataFrame | None = None,
-) -> DataFrame:
-    """MinHash signatures as a frame op: explode shingles, hash each
-    shingle ONCE per permutation, min-aggregate per document.
+def minhash_signature_df(features: DataFrame) -> DataFrame:
+    """MinHash signatures as a frame op over :func:`document_features`:
+    explode the distinct shingle sets, hash each shingle ONCE per
+    permutation, min-aggregate per document.
 
     This is the scale shape: the column-expression variant
     (:func:`minhash_signature`) nests the shingle computation inside
     every permutation and Catalyst cannot common-subexpression it —
     at corpus scale that's a combinatorial expression tree. Here work
-    is linear: |shingles| x num_perms hash evaluations + one shuffle.
-    (Measured: the shuffling dropDuplicates pays for itself by cutting
-    the 16-hash work on duplicated shingles, and explode directly on
-    the shingles expression stays in one Generate codegen stage —
-    projecting the array through an ``array_distinct`` boundary first
-    measured ~4x slower end-to-end; a *persisted* ``doc_sh`` input
-    avoids the recompute entirely and needs no dropDuplicates
-    shuffle since its arrays are already distinct). Returns
-    (id, m0..m{P-1}).
+    is linear: |shingles| x MINHASH_PERMS hash evaluations + one
+    shuffle; the arrays are already distinct, so no dropDuplicates.
+    Returns (id, m0..m{MINHASH_PERMS-1}).
     """
-    if doc_sh is not None:
-        sh = doc_sh.select("id", F.explode("sh").alias("_s"))
-    else:
-        sh = df.select(
-            F.col(id_col).alias("id"), F.explode(shingles(text_col)).alias("_s")
-        ).dropDuplicates(["id", "_s"])
+    sh = features.select("id", F.explode("sh").alias("_s"))
     # generated-SQL chains (sqlexpr): the 16 per-permutation mixes
     # assembled one F.expr parse each instead of ~12 py4j calls each —
     # bit-identical (pinned), same plan shape
@@ -195,11 +194,11 @@ def minhash_signature_df(
         "id",
         *[
             F.expr(mix_hash_sql("_hb", k)).alias(f"_h{k}")
-            for k in range(num_perms)
+            for k in range(MINHASH_PERMS)
         ],
     )
     return hashed.groupBy("id").agg(
-        *[F.min(f"_h{k}").alias(f"m{k}") for k in range(num_perms)]
+        *[F.min(f"_h{k}").alias(f"m{k}") for k in range(MINHASH_PERMS)]
     )
 
 
@@ -255,22 +254,30 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash + LSH banding.
 
-    plan: signature (JVM exprs) -> explode band keys -> self-join on
-    band key -> distinct pairs. The only shuffle is on the band key;
-    identical docs share all bands, similar docs >=1.
+    plan: document features -> signature (JVM exprs) -> explode band
+    keys -> self-join on band key -> distinct pairs. The only shuffle
+    is on the band key; identical docs share all bands, similar docs
+    >=1.
 
     The banded signature table is checkpointed before the self-join:
     Catalyst does not CSE subtrees, so without it BOTH join sides
-    re-run the scan + shingle explode + 16-hash + min-agg pipeline
-    (measured 6 parquet scans in dedup_minhash_lsh's plan) — the same
-    guard minhash_dedup_pairs has carried via persist() since r6. The
-    checkpointed frame is |docs| x bands small-int rows, not corpus
-    text. Dynamic-allocation caveat: see the package docstring
+    re-run the scan + shingle + 16-hash + min-agg pipeline (measured
+    6 parquet scans in dedup_minhash_lsh's plan). The checkpointed
+    frame is |docs| x bands small-int rows, not corpus text; the
+    features it was built from are released once it exists.
+    Dynamic-allocation caveat: see the package docstring
     (h3ron_spark/pipeline/__init__.py).
     """
-    sigs = minhash_signature_df(df, text_col, id_col).select(
+    features = document_features(df, text_col, id_col)
+    sigs = minhash_signature_df(features).select(
         "id", F.explode(_band_keys_from_sig()).alias("band")
     ).localCheckpoint()
+    features.unpersist()
+    return _band_pairs(sigs)
+
+
+def _band_pairs(sigs: DataFrame) -> DataFrame:
+    """Distinct (id_a < id_b) pairs sharing >= 1 band key."""
     a = sigs.alias("a")
     b = sigs.alias("b")
     return (
@@ -278,62 +285,45 @@ def minhash_lsh_candidates(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
+
+
+def set_jaccard(sh_a, sh_b) -> Column:
+    """Exact Jaccard of two distinct-element arrays, rounded to 4 dp:
+    |a ∩ b| / (|a| + |b| - |a ∩ b|)."""
+    inter = F.size(F.array_intersect(sh_a, sh_b))
+    union = F.size(sh_a) + F.size(sh_b) - inter
+    return F.round(inter.cast("double") / union, 4)
 
 
 def jaccard_similarity(text_a: Column, text_b: Column, n: int = 3) -> Column:
     """Exact word-shingle Jaccard between two text columns."""
-    sa = F.array_distinct(shingles(text_a, n))
-    sb = F.array_distinct(shingles(text_b, n))
-    inter = F.size(F.array_intersect(sa, sb))
-    union = F.size(sa) + F.size(sb) - inter
-    return F.round(inter.cast("double") / union, 4)
+    return set_jaccard(
+        F.array_distinct(shingles(text_a, n)),
+        F.array_distinct(shingles(text_b, n)),
+    )
 
 
 def minhash_dedup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-    doc_sh: DataFrame | None = None,
+    features: DataFrame, threshold: float = 0.7
 ) -> DataFrame:
-    """LSH candidates refined by exact shingle Jaccard >= threshold.
+    """LSH candidates over :func:`document_features`, refined by exact
+    shingle Jaccard >= threshold.
 
-    The tokenize/shingle pass runs ONCE per document (persisted
-    ``doc_shingles_df``); the signature stage explodes that cached
-    array (no dropDuplicates shuffle — arrays are pre-distinct) and
-    the Jaccard refine joins the same cached arrays into the
-    candidate pairs instead of re-splitting raw text per pair. The
-    banded signature table is persisted too so the LSH self-join
-    reads it twice without re-running the hash/min pipeline.
-
-    ``doc_sh`` lets a caller that ALREADY derives the per-document
-    distinct shingle set (id, sh) — e.g. a curation funnel sharing one
-    corpus scan across its stage families — supply it instead of
-    paying a second scan+tokenize here. The caller owns its
-    materialization (pass a persisted frame or a cheap projection of
-    one); the arrays must be ``array_distinct(shingles(text, 3))``
-    over the same id/text, which is exactly ``doc_shingles_df``'s
-    contract — the default path is unchanged."""
-    if doc_sh is None:
-        doc_sh = doc_shingles_df(df, text_col, id_col).persist()
-    sigs = minhash_signature_df(df, doc_sh=doc_sh).select(
+    The signature stage and the Jaccard refine share the features'
+    persisted shingle arrays: no re-split of raw text per candidate
+    pair. The banded signature table is persisted too so the LSH
+    self-join reads it twice without re-running the hash/min
+    pipeline. Returns (id_a, id_b, jaccard)."""
+    sigs = minhash_signature_df(features).select(
         "id", F.explode(_band_keys_from_sig()).alias("band")
     ).persist()
-    a = sigs.alias("a")
-    b = sigs.alias("b")
-    cands = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    sh_a = doc_sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sh_b = doc_sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+    sh_a = features.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    sh_b = features.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     return (
-        cands.join(sh_a, "id_a")
+        _band_pairs(sigs)
+        .join(sh_a, "id_a")
         .join(sh_b, "id_b")
-        .withColumn("jaccard", F.round(inter.cast("double") / union, 4))
+        .withColumn("jaccard", set_jaccard("sh_a", "sh_b"))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -371,56 +361,25 @@ def dedup_keep_first(
 
 
 def ngram_contamination(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    corpus_sh: DataFrame | None = None,
-    benchmark_sh: DataFrame | None = None,
+    corpus_features: DataFrame, benchmark_features: DataFrame
 ) -> DataFrame:
     """Benchmark decontamination: per-document fraction of distinct
-    word n-grams that also occur in a held-out benchmark set (the
+    word trigrams that also occur in a held-out benchmark set (the
     overlap check run before training to drop eval-contaminated
-    documents). Returns (id, n_grams, n_matched, contamination).
+    documents). Both sides are :func:`document_features` frames (or
+    filters of one). Returns (id, n_grams, n_matched, contamination).
 
     Scale: the benchmark gram set is tiny relative to a training
     corpus (eval suites are MBs), so it broadcasts and the whole check
     is one map-side hash join + one combinable aggregation over the
     exploded distinct grams — no corpus-side shuffle on the gram key,
-    no Python.
-
-    ``corpus_sh`` / ``benchmark_sh`` let a caller that already
-    materializes the per-document distinct gram arrays (id, sh) —
-    ``doc_shingles_df``'s shape with the same ``n`` — feed them in
-    instead of re-scanning and re-tokenizing raw text per side;
-    exploding a pre-distinct array yields exactly the rows the
-    default path derives, so results are identical by construction."""
-    if benchmark_sh is not None:
-        bench_grams = (
-            benchmark_sh.select(F.explode("sh").alias("gram"))
-            .distinct()
-            .withColumn("_hit", F.lit(1))
-        )
-    else:
-        bench_grams = (
-            benchmark.select(
-                F.explode(
-                    F.array_distinct(shingles(text_col, n))
-                ).alias("gram")
-            )
-            .distinct()
-            .withColumn("_hit", F.lit(1))
-        )
-    if corpus_sh is not None:
-        doc_grams = corpus_sh.select(
-            "id", F.explode("sh").alias("gram")
-        )
-    else:
-        doc_grams = corpus.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.array_distinct(shingles(text_col, n))).alias("gram"),
-        )
+    no Python."""
+    bench_grams = (
+        benchmark_features.select(F.explode("sh").alias("gram"))
+        .distinct()
+        .withColumn("_hit", F.lit(1))
+    )
+    doc_grams = corpus_features.select("id", F.explode("sh").alias("gram"))
     return (
         doc_grams.join(F.broadcast(bench_grams), "gram", "left")
         .groupBy("id")

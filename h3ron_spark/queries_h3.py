@@ -227,7 +227,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical md5-derived permutation hashes."""
     par = spark.sparkContext.defaultParallelism
     docs = load(spark, sf_dir, "documents").repartition(par)
-    return DD.minhash_dedup_pairs(docs, threshold=0.5)
+    return DD.minhash_dedup_pairs(DD.document_features(docs), threshold=0.5)
 
 
 _MINHASH_CLUSTER_ORACLE = rf"""
@@ -268,7 +268,7 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     par = spark.sparkContext.defaultParallelism
     docs = load(spark, sf_dir, "documents").repartition(par)
-    pairs = DD.minhash_dedup_pairs(docs, threshold=0.5)
+    pairs = DD.minhash_dedup_pairs(DD.document_features(docs), threshold=0.5)
     comps = CP.label_components(pairs)
     return comps.groupBy(F.col("component").alias("cluster")).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -569,18 +569,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline the LSH path approximates; subsampled so the cross join
     stays bounded)."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    sh = docs.select(
-        "doc_id", F.array_distinct(DD.shingles("text")).alias("sh")
-    )
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+    feats = DD.document_features(docs)
+    a = feats.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    b = feats.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("jaccard", F.round(inter.cast("double") / union, 4))
-        .filter(inter > 0)
-        .select("id_a", "id_b", "jaccard")
+        .filter(F.arrays_overlap("sh_a", "sh_b"))
+        .select("id_a", "id_b", DD.set_jaccard("sh_a", "sh_b").alias("jaccard"))
     )
 
 
@@ -644,6 +639,12 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+def _eval_set(features: DataFrame) -> DataFrame:
+    """The held-out eval set of the decontamination queries: every
+    97th document."""
+    return features.filter(F.col("id") % 97 == 0)
+
+
 _DECON_ORACLE = f"""
   WITH b AS (
     SELECT DISTINCT unnest(list_distinct({_SHINGLES})) AS gram
@@ -672,9 +673,10 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition, which would run the (HOF-heavy) shingle expression
     # on a single core
     par = spark.sparkContext.defaultParallelism
-    docs = load(spark, sf_dir, "documents").repartition(par)
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    out = DD.ngram_contamination(docs, bench)
+    feats = DD.document_features(
+        load(spark, sf_dir, "documents").repartition(par)
+    )
+    out = DD.ngram_contamination(feats, _eval_set(feats))
     return out.select(
         F.col("id").alias("doc_id"),
         "n_grams",
@@ -1050,6 +1052,17 @@ def _avg_e4(col) -> "F.Column":
     return avg_int / F.lit(10000.0)
 
 
+def _quality_keep() -> "F.Column":
+    """The composed quality keep predicate over document_features'
+    ``n``/``top_tok`` and ngram_contamination's ``contamination``:
+    token-length band, Gopher top-token repetition, decontamination."""
+    return (
+        F.col("n").between(35, 58)
+        & (F.col("top_tok") <= 0.09)
+        & (F.col("contamination") <= 0.02)
+    )
+
+
 _QUALITY_GATE_ORACLE = f"""
   WITH t AS (
     SELECT doc_id, source,
@@ -1093,32 +1106,23 @@ def pipeline_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass: token-length band (35-58), Gopher-style top-token repetition
     (<= 0.09), and benchmark decontamination (3-gram overlap <= 0.02
     vs the held-out eval set). Per-source keep counts — the composed
-    keep/drop decision a real corpus filter ships."""
-    from h3ron_spark.pipeline import text as TX
-
+    keep/drop decision a real corpus filter ships. Stats and
+    decontamination share one persisted features frame: one corpus
+    scan."""
     par = spark.sparkContext.defaultParallelism
-    docs = load(spark, sf_dir, "documents").repartition(par)
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    contam = DD.ngram_contamination(docs, bench).select(
-        F.col("id").alias("doc_id"), "contamination"
+    feats = DD.document_features(
+        load(spark, sf_dir, "documents").repartition(par)
     )
-    stats = docs.select(
-        "doc_id",
-        "source",
-        TX.token_count("text").alias("n"),
-        TX.top_token_fraction("text").alias("top_tok"),
-    )
-    joined = stats.join(contam, "doc_id")
-    keep = (
-        F.col("n").between(35, 58)
-        & (F.col("top_tok") <= 0.09)
-        & (F.col("contamination") <= 0.02)
+    contam = DD.ngram_contamination(feats, _eval_set(feats)).select(
+        "id", "contamination"
     )
     return (
-        joined.groupBy("source")
+        feats.select("id", "source", "n", "top_tok")
+        .join(contam, "id")
+        .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(keep.cast("int")).cast("long").alias("n_keep"),
+            F.sum(_quality_keep().cast("int")).cast("long").alias("n_keep"),
             _avg_e4("contamination").alias("avg_contamination"),
         )
         .orderBy("source")
@@ -1210,50 +1214,32 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast benchmark join — no stage shuffles the full corpus more
     than once.
 
-    The corpus is SCANNED once too (r12): every per-document
-    derivation the four families need — content hash, distinct
-    shingle set (shared by minhash and decontamination, which use the
-    same n=3 grams), token stats — rides one persisted base frame.
-    Before it, the 4-family join tree read documents.parquet five
+    The corpus is SCANNED once too: every per-document derivation the
+    four families need — content hash, distinct shingle set (shared
+    by minhash and decontamination, which use the same n=3 grams),
+    token stats — rides one persisted dedup.document_features frame.
+    Without it the 4-family join tree read documents.parquet five
     times and tokenized the corpus three times (Catalyst does not CSE
     plan subtrees); at 100 TB the scan count IS the cost of a 20-row
     report."""
     from h3ron_spark.pipeline import components as CP
-    from h3ron_spark.pipeline import text as TX
 
     par = spark.sparkContext.defaultParallelism
-    docs = load(spark, sf_dir, "documents").repartition(par)
-    base = docs.select(
-        "doc_id",
-        "source",
-        F.md5(F.col("text")).alias("h"),
-        TX.token_count("text").alias("n"),
-        TX.top_token_fraction("text").alias("top_tok"),
-        # doc_shingles_df's contract: distinct word-trigram shingles
-        F.array_distinct(DD.shingles("text", 3)).alias("sh"),
-    ).persist()
-    doc_sh = base.select(F.col("doc_id").alias("id"), "sh")
-    exact_min = base.groupBy("h").agg(F.min("doc_id").alias("exact_min"))
-    pairs = DD.minhash_dedup_pairs(docs, threshold=0.5, doc_sh=doc_sh)
+    base = DD.document_features(
+        load(spark, sf_dir, "documents").repartition(par)
+    )
+    exact_min = base.groupBy("h").agg(F.min("id").alias("exact_min"))
+    pairs = DD.minhash_dedup_pairs(base, threshold=0.5)
     comps = CP.label_components(pairs).select(
-        F.col("id").alias("doc_id"), F.col("component").alias("cluster")
+        "id", F.col("component").alias("cluster")
     )
-    bench_sh = doc_sh.filter(F.col("id") % 97 == 0)
-    contam = DD.ngram_contamination(
-        docs, docs, corpus_sh=doc_sh, benchmark_sh=bench_sh
-    ).select(F.col("id").alias("doc_id"), "contamination")
-    f = (
-        base.join(exact_min, "h")
-        .join(comps, "doc_id", "left")
-        .join(contam, "doc_id")
+    contam = DD.ngram_contamination(base, _eval_set(base)).select(
+        "id", "contamination"
     )
-    de = F.col("doc_id") != F.col("exact_min")
-    dn = F.col("cluster").isNotNull() & (F.col("doc_id") != F.col("cluster"))
-    keep_q = (
-        F.col("n").between(35, 58)
-        & (F.col("top_tok") <= 0.09)
-        & (F.col("contamination") <= 0.02)
-    )
+    f = base.join(exact_min, "h").join(comps, "id", "left").join(contam, "id")
+    de = F.col("id") != F.col("exact_min")
+    dn = F.col("cluster").isNotNull() & (F.col("id") != F.col("cluster"))
+    keep_q = _quality_keep()
 
     def cnt(cond) -> "F.Column":
         return F.sum(cond.cast("int")).cast("long")

@@ -63,6 +63,10 @@ QUERIES = [
     # round-9 addition: the production absolute-cap editdistance
     # configuration (VERDICT r8 #5)
     "dedup_editdistance_absolute",
+    # the document-features consumers that read the corpus once
+    "pipeline_quality_gate",
+    "text_decontaminate",
+    "pipeline_corpus_curation",
 ]
 
 # physical-node class name -> digest label (Exec suffix stripped).

@@ -63,11 +63,10 @@ def test_hdr_quantiles_builds_histogram_once(spark):
 
 
 def test_minhash_lsh_candidates_materializes_signatures_once(spark):
-    """ADVICE r11: the checkpointed banded-signature guard added to
-    minhash_lsh_candidates (the un-persisted sibling of
-    minhash_dedup_pairs) had no plan pin — a refactor could silently
-    reintroduce the 6-scan shape where BOTH self-join sides re-run
-    the scan + shingle + hash + min-agg lineage."""
+    """minhash_lsh_candidates builds its own document features and
+    checkpoints the banded signatures before the self-join; without
+    the checkpoint BOTH self-join sides re-run the scan + shingle +
+    hash + min-agg lineage (the 6-scan shape)."""
     from h3ron_spark.pipeline.dedup import minhash_lsh_candidates
 
     src = spark.range(300).select(
@@ -89,36 +88,54 @@ def test_minhash_lsh_candidates_materializes_signatures_once(spark):
     assert out.count() > 0
 
 
-def test_corpus_curation_single_documents_scan(spark):
-    """r12: pipeline_corpus_curation's four stage families (exact
-    dedup, minhash near-dup, decontamination, quality stats) must all
-    ride ONE persisted corpus scan — before the shared base frame the
-    final plan read documents.parquet five times and tokenized the
-    corpus three times. The pin allows only cache-printed
-    InMemoryRelation copies of the one scan: no parquet leaf may
-    appear outside an InMemoryRelation block in the executed plan."""
+def _assert_single_documents_scan(spark, name):
+    """Run registry query ``name`` at sf0.001 and require that its only
+    corpus scan is the one building the persisted features frame.
+    executedPlan prints each InMemoryTableScan leaf with its cached
+    build plan nested under "+- InMemoryRelation"; a "Scan parquet"
+    line in the top-level segment before the first such marker would
+    be a fresh corpus scan."""
     from h3ron_spark import queries as Q
 
-    df = Q.queries()["pipeline_corpus_curation"](
-        spark, "/root/testdata/sf0.001"
-    )
-    plan = _final_plan(df)
-    # executedPlan prints InMemoryTableScan leaves with their cached
-    # build plan nested under "+- InMemoryRelation"; a bare
-    # FileSourceScan line NOT indented under an InMemoryRelation block
-    # would be a fresh corpus scan. Cheap structural check: every
-    # "Scan parquet" line must be preceded (anywhere above) by an
-    # InMemoryRelation line with smaller indent... simpler and
-    # sufficient: the TOP-LEVEL plan segment before the first
-    # InMemoryRelation marker must contain no parquet scan.
-    head = plan.split("InMemoryRelation", 1)[0]
+    df = Q.queries()[name](spark, "/root/testdata/sf0.001")
+    head = _final_plan(df).split("InMemoryRelation", 1)[0]
     assert "Scan parquet" not in head, head[-2000:]
+    return df
+
+
+def test_corpus_curation_single_documents_scan(spark):
+    """pipeline_corpus_curation's four stage families (exact dedup,
+    minhash near-dup, decontamination, quality stats) must all ride
+    ONE persisted corpus scan — without the shared features frame the
+    final plan read documents.parquet five times and tokenized the
+    corpus three times."""
+    df = _assert_single_documents_scan(spark, "pipeline_corpus_curation")
     rows = {r.source: r for r in df.collect()}
     assert rows and all(
         r.n_docs
         == r.n_drop_exact + r.n_drop_neardup + r.n_drop_quality + r.n_keep
         for r in rows.values()
     )
+
+
+def test_quality_gate_single_documents_scan(spark):
+    """pipeline_quality_gate's token stats and decontamination (corpus
+    and eval-set sides) ride one document_features frame; the
+    per-family derivations read documents.parquet three times."""
+    df = _assert_single_documents_scan(spark, "pipeline_quality_gate")
+    rows = df.collect()
+    assert rows and all(0 <= r.n_keep <= r.n_docs for r in rows)
+
+
+def test_text_decontaminate_single_documents_scan(spark):
+    """text_decontaminate's corpus grams and eval-set grams come from
+    one document_features frame; deriving each side from raw text
+    read documents.parquet twice."""
+    df = _assert_single_documents_scan(spark, "text_decontaminate")
+    rows = df.collect()
+    assert rows and all(0 <= r.n_matched <= r.n_grams for r in rows)
+    # every eval-set document matches all of its own grams
+    assert all(r.contamination == 1.0 for r in rows if r.doc_id % 97 == 0)
 
 
 def test_drift_report_counts_family_single_scan(spark):
@@ -147,3 +164,24 @@ def test_drift_report_counts_family_single_scan(spark):
     assert rows[("n_rows", "*")].batch_a == 2000
     assert rows[("n_rows", "*")].batch_b == 2000
     assert rows[("null_rate_e4", "num")].delta == 0
+
+
+def test_document_features_shape(spark):
+    """document_features: one persisted frame carrying the id, the
+    pass-through columns, and the derived hash/token/shingle columns;
+    the shingle array is distinct even when the text repeats a
+    trigram."""
+    from h3ron_spark.pipeline.dedup import document_features
+
+    src = spark.createDataFrame(
+        [(1, "s0", "a b c a b c"), (2, "s1", "x")],
+        "doc_id long, source string, text string",
+    )
+    f = document_features(src)
+    assert f.is_cached
+    assert f.columns == ["id", "source", "h", "n", "top_tok", "sh"]
+    rows = {r.id: r for r in f.collect()}
+    assert sorted(rows[1].sh) == ["a b c", "b c a", "c a b"]
+    assert (rows[1].n, rows[1].top_tok, rows[1].source) == (6, 0.3333, "s0")
+    assert (rows[2].sh, rows[2].n) == (["x"], 1)
+    f.unpersist()

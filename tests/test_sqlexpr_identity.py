@@ -127,9 +127,10 @@ def test_bloom_pos_array_sql(docs):
 
 
 def test_band_keys_sql(docs):
-    # signature columns m0..m15 from the production builder, then the
-    # pre-r11 Column band keys vs the generated SQL
-    sig = D.minhash_signature_df(docs)
+    # signature columns m0..m15 from the production builder over the
+    # document features, then the pre-r11 Column band keys vs the
+    # generated SQL
+    sig = D.minhash_signature_df(D.document_features(docs))
     rows = D.MINHASH_PERMS // D.LSH_BANDS
     old = F.array(
         *[
