@@ -401,46 +401,22 @@ def main() -> None:
         floor_degraded=floor_degraded,
     )
     # stop Spark BEFORE printing: nothing (progress bars, shutdown
-    # warnings) may land on the stream after the JSON lines, because
-    # the driver records only the LAST ~2000 chars of output
+    # warnings) may land on the stream after the JSON line, which a
+    # reader takes as the last line of output
     spark.stop()
 
-    # full record -> BENCH_LAST.local.json (authoritative;
-    # BENCH_r04.json proved the 81-query dict cannot fit the driver's
-    # 2000-char tail capture: the query names alone are 1.5k chars).
-    # The path is UNTRACKED by design (VERDICT r6: every capture —
-    # builder, driver, judge — clobbers the last one, so a committed
-    # copy sat permanently "modified" in git status; only the
-    # per-round BENCH_r{N}.json records belong in history). Subset
-    # runs (SPARK_GRAFT_BENCH_QUERIES debug/scale overrides) must not
-    # clobber the official full-suite record.
+    # full record -> BENCH_LAST.local.json. The path is UNTRACKED by
+    # design (VERDICT r6: every capture clobbers the last one, so a
+    # committed copy sat permanently "modified" in git status; only
+    # the per-round BENCH_r{N}.json records belong in history).
+    # Subset runs (SPARK_GRAFT_BENCH_QUERIES debug/scale overrides)
+    # must not clobber the official full-suite record.
     if not override:
         here = os.path.dirname(os.path.abspath(__file__))
         with open(os.path.join(here, "BENCH_LAST.local.json"), "w") as f:
             json.dump(result, f)
 
-    # full line first (complete in any un-clipped log), then — as the
-    # FINAL line — a compact JSON guaranteed to fit the tail capture
     print(json.dumps(result))
-    print(json.dumps(build_compact(result), separators=(",", ":")))
-
-
-# B1-B6 + graph headliners lead the compact line; the remaining slots
-# go most-expensive-first (the rows a perf reviewer looks at first)
-COMPACT_PRIORITY = [
-    "geo_cell_rollup", "geo_disk_explode", "geo_compact_events",
-    "geo_polyfill_filter", "geo_route_line", "geo_raster_cells",
-    "golden_germany_route", "graph_sssp_frontier", "graph_pagerank",
-]
-COMPACT_BUDGET = 1800  # chars; driver tail capture holds ~2000
-# The per-query dict is the driver's ONLY perf signal (PERF_r{N}.json
-# diffs it): r11's noisy capture carried 16 floor_degraded entries,
-# the fixed fields ate the budget, and only 3 query rows survived —
-# the driver then reported 20 phantom "dropped_from_bench" rows
-# (VERDICT r11 "What's wrong" #1). Guarantee at least this many rows
-# by shedding floor stamps (all live complete in BENCH_LAST.local.json
-# and the committed official artifact) before shrinking the dict.
-COMPACT_MIN_QUERY_ROWS = 20
 
 
 def build_result(
@@ -471,8 +447,8 @@ def build_result(
     if floor_steal:
         # hypervisor steal%% measured ACROSS each floor (the
         # co-tenant signal loadavg cannot give on a box the bench
-        # itself saturates) — full record only; the compact line
-        # carries the capture-wide machine.steal_pct
+        # itself saturates); machine.steal_pct is the capture-wide
+        # figure
         result["floor_steal"] = floor_steal
     if floors:
         # ALWAYS present when floors are (possibly {} = "every floor
@@ -482,69 +458,6 @@ def build_result(
         # machine-state (VERDICT r9 #3 / r10 #3).
         result["floor_degraded"] = dict(floor_degraded or {})
     return result
-
-
-def build_compact(result: dict) -> dict:
-    """Compact sibling of the full result: same schema, queries filled
-    in priority order under a hard serialized-size budget so the final
-    stdout line always survives a bounded tail capture intact."""
-    timings = result["queries"]
-    ordered = [n for n in COMPACT_PRIORITY if n in timings] + sorted(
-        (n for n in timings if n not in COMPACT_PRIORITY),
-        key=lambda n: -timings[n],
-    )
-    compact = {
-        "metric": result["metric"],
-        "value": result["value"],
-        "unit": "sec",
-        "sf": result["sf"],
-        "n_queries": len(timings),
-        "queries_file": "BENCH_LAST.local.json",
-        "queries": {},
-    }
-    if "machine" in result:
-        compact["machine"] = result["machine"]
-    if "floors" in result:
-        compact["floors"] = result["floors"]
-    if "floor_load" in result:
-        compact["floor_load"] = result["floor_load"]
-    if "floor_degraded" in result:
-        # the degraded flags ride in the tail-captured line too — the
-        # driver's BENCH_r{N}.json records only the compact line, and
-        # an unflagged inverted floor THERE is exactly the r10 failure
-        compact["floor_degraded"] = result["floor_degraded"]
-    # Fill the query dict under the budget; if fewer than
-    # COMPACT_MIN_QUERY_ROWS rows fit, shed the next floor-stamp field
-    # and refill. Shed order: loadavg stamps first (lowest adjudication
-    # value), then floors, then the degraded flags — all three live
-    # complete in BENCH_LAST.local.json and the committed per-round
-    # official artifact; the per-query dict exists ONLY here, so it
-    # wins the budget fight (VERDICT r11 #1: 16 degraded flags starved
-    # it to 3 rows and the driver diffed 20 phantom drops).
-    target = min(COMPACT_MIN_QUERY_ROWS, len(ordered))
-    for shed in (None, "floor_load", "floors", "floor_degraded"):
-        if shed is not None:
-            if shed not in compact:
-                continue
-            compact.pop(shed)
-            if shed == "floor_degraded":
-                # keep the contamination signal itself: a reader of a
-                # shed compact line must still see HOW MANY floors
-                # were bad (the full list is in the untracked/official
-                # records)
-                n_bad = len(result.get("floor_degraded", {}) or {})
-                if n_bad:
-                    compact["n_floor_degraded"] = n_bad
-        compact["queries"] = {}
-        for name in ordered:
-            compact["queries"][name] = timings[name]
-            if len(json.dumps(compact, separators=(",", ":"))) > COMPACT_BUDGET:
-                del compact["queries"][name]
-                break
-        if len(compact["queries"]) >= target:
-            break
-    compact["n_shown"] = len(compact["queries"])
-    return compact
 
 
 if __name__ == "__main__":

@@ -50,11 +50,6 @@ _I32 = pa.int32()
 _BOOL = pa.bool_()
 _STR = pa.string()
 _LATLNG = pa.struct([pa.field("lat", _F64), pa.field("lng", _F64)])
-_IJ = pa.struct([pa.field("i", _I32), pa.field("j", _I32)])
-_CELL_K = pa.struct([pa.field("cell", _I64), pa.field("k", _I32)])
-_EDGE_CELLS = pa.struct(
-    [pa.field("origin", _I64), pa.field("destination", _I64)]
-)
 _ARR_I64 = pa.list_(_I64)
 
 _LATLNG_SPARK = T.StructType(
@@ -76,12 +71,6 @@ _EDGE_CELLS_SPARK = T.StructType(
 )
 _BOUNDARY_SPARK = T.ArrayType(_LATLNG_SPARK)
 _ARR_I64_SPARK = T.ArrayType(T.LongType())
-
-
-def _latlng_struct(pairs):
-    lats = pa.array([None if p is None else p[0] for p in pairs], _F64)
-    lngs = pa.array([None if p is None else p[1] for p in pairs], _F64)
-    return pa.StructArray.from_arrays([lats, lngs], names=["lat", "lng"])
 
 
 # ------------------------------------------------------------ encode / decode

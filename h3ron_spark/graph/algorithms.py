@@ -25,20 +25,16 @@ Pregel-style frontier relaxation where each iteration is one join +
 min-agg on the co-partitioned edges table. Same results, no driver
 materialization; O(longest-shortest-path-hops) iterations.
 
-Prepared-frame contract (deliberate asymmetry with pagerank's
-`PageRankRun` handle, declared policy since r7/r8): a frame returned
-by `prepare_sssp_edges` carries `_sssp_tile_fn` / `_sssp_npart` as
-plain Python attributes — a per-session FAST PATH only, never a
-lifecycle contract. Any frame with the `(_tile, _bucket, _u, _v,
-_w)` column set is accepted by `sssp_frontier` even when those
-attributes are gone (pickled, reloaded from the catalog via
-`persist_sssp_edges_bucketed`, rebuilt by a different process): the
-(cell -> tile/bucket) seeding map is then derived exactly from the
-STORED `_tile`/`_bucket` columns. Pagerank needed a handle because
-its attribute held un-releasable `cache()` registrations (a resource
-lifecycle); these attributes hold a pure expression + an int with a
-lossless column fallback, so a handle would add API surface without
-removing any failure mode.
+Prepared-frame contract: a frame returned by `prepare_sssp_edges`
+carries `_sssp_tile_fn` / `_sssp_npart` as plain Python attributes —
+a per-session FAST PATH only, never a lifecycle contract. Any frame
+with the `(_tile, _bucket, _u, _v, _w)` column set is accepted by
+`sssp_frontier` even when those attributes are gone (any
+transformation, pickling or a rebuild in another process drops
+them): the (cell -> tile/bucket) seeding map is then derived exactly
+from the STORED `_tile`/`_bucket` columns. The attributes hold a pure
+expression + an int with a lossless column fallback, so a handle
+object would add API surface without removing any failure mode.
 """
 
 from __future__ import annotations
@@ -623,11 +619,11 @@ def _default_tile(col):
 
 
 # _bucket domain oversampling: the physical layout re-hashes the
-# _bucket VALUES into n_buckets partitions/files (repartition and
-# bucketBy both apply Murmur3 to the column — Spark gives no identity
-# partitioner), so with exactly n_buckets distinct values that second
-# hash is balls-in-bins at load factor 1: ~1/e of the partitions come
-# out EMPTY and others hold several bucket values (ADVICE r7 — reduced
+# _bucket VALUES into n_buckets partitions (repartition applies
+# Murmur3 to the column — Spark gives no identity partitioner), so
+# with exactly n_buckets distinct values that second hash is
+# balls-in-bins at load factor 1: ~1/e of the partitions come out
+# EMPTY and others hold several bucket values (ADVICE r7 — reduced
 # scan parallelism + cogroup skew, correctness unaffected). Carrying
 # 8x more distinct _bucket values drops the empty-partition rate to
 # ~e^-8 (~0.03%) and caps the expected max/mean load near 1.5 while
@@ -635,42 +631,12 @@ def _default_tile(col):
 # invocations per partition, never one per tile).
 _BUCKET_OVERSAMPLE = 8
 
-# bumped whenever the _bucket expression itself changes shape (v2 =
-# the oversampled domain above; v1 was pmod(hash(_tile), n_buckets)
-# with no oversampling). Stamped into every persist_sssp_edges_bucketed
-# table and verified by load_sssp_edges_bucketed (ADVICE r8): the
-# formula is frozen into stored rows, so a reader recomputing buckets
-# under a different formula would cogroup to zero pairs silently.
-_BUCKET_FORMULA_VERSION = 2
-
 
 def _bucket_of(tile_col, n_buckets: int):
     """The frozen _bucket formula — the one expression every producer
     (edge annotation) and consumer (frontier tiling, plan-pin tests)
     must share, or the cogroup silently pairs nothing."""
     return F.pmod(F.hash(tile_col), F.lit(n_buckets * _BUCKET_OVERSAMPLE))
-
-
-def _annotate_sssp_edges(edges: DataFrame, tile_fn, n_buckets: int):
-    """The ``(_tile, _bucket, _u, _v, _w)`` tile-annotated edge frame
-    — the ONE definition shared by :func:`prepare_sssp_edges` (session
-    cache layout) and :func:`persist_sssp_edges_bucketed` (durable
-    catalog layout); the two layouts stay interchangeable only while
-    both use this exact recipe (same contract as pagerank's
-    ``_annotate_out_weights``). Two-level key: ``_tile`` (fine, for
-    the per-round isin scan prune) and ``_bucket`` (coarse, tiles
-    hashed into an oversampled ``n_buckets * _BUCKET_OVERSAMPLE``
-    domain — see the constant above) — the cogroup keys on
-    ``_bucket`` so the Python kernel runs a bounded number of times
-    per partition, not once per tile."""
-    tile_col = tile_fn(F.col("origin"))
-    return edges.select(
-        tile_col.alias("_tile"),
-        _bucket_of(tile_col, n_buckets).alias("_bucket"),
-        F.col("origin").alias("_u"),
-        F.col("destination").alias("_v"),
-        F.col("weight").alias("_w"),
-    )
 
 
 def prepare_sssp_edges(
@@ -693,8 +659,18 @@ def prepare_sssp_edges(
     every round."""
     npart = num_partitions or edges.sparkSession.sparkContext.defaultParallelism
     tile_fn = tile_expr if tile_expr is not None else _default_tile
+    # two-level key: _tile (fine, for the per-round isin scan prune)
+    # and _bucket (coarse, the cogroup key, so the Python kernel runs a
+    # bounded number of times per partition, not once per tile)
+    tile_col = tile_fn(F.col("origin"))
     e = (
-        _annotate_sssp_edges(edges, tile_fn, npart)
+        edges.select(
+            tile_col.alias("_tile"),
+            _bucket_of(tile_col, npart).alias("_bucket"),
+            F.col("origin").alias("_u"),
+            F.col("destination").alias("_v"),
+            F.col("weight").alias("_w"),
+        )
         .repartition(npart, "_bucket")
         .sortWithinPartitions("_bucket")
         .persist()
@@ -703,154 +679,6 @@ def prepare_sssp_edges(
     e._sssp_tile_fn = tile_fn
     e._sssp_npart = npart
     return e
-
-
-def persist_sssp_edges_bucketed(
-    edges: DataFrame,
-    table_name: str,
-    tile_expr=None,
-    n_buckets: int = 32,
-    mode: str = "overwrite",
-) -> DataFrame:
-    """Durable cross-session layout for repeated SSSP floods over the
-    SAME graph (a road network flooded daily): the same
-    ``(_tile, _bucket, _u, _v, _w)`` frame :func:`prepare_sssp_edges`
-    builds, written ``bucketBy(n_buckets, "_bucket")`` + sorted — the
-    sssp sibling of ``pagerank.persist_edges_bucketed`` (VERDICT r6
-    #8). The bucketed scan carries its hash layout from catalog
-    metadata, so each flood round's by-bucket cogroup reads the
-    |E|-sized edge side IN PLACE (zero shuffle exchanges, plan-pinned
-    in test_plans.test_sssp_bucketed_edges_shuffle_free) — the benefit
-    ``prepare_sssp_edges``'s ``cache()`` provides per session, made
-    persistent and memory-free.
-
-    Returns the catalog-backed frame; feed it straight to
-    :func:`sssp_frontier`. The prepared-frame detection there is by
-    COLUMN SET, and the (cell -> tile) seeding map is derived from the
-    stored ``_tile`` column itself (a distinct side table, exact under
-    ANY stored tile function), so a table loaded in a later session —
-    where the Python ``tile_expr`` closure no longer exists — floods
-    correctly with tile pruning intact.
-
-    ``n_buckets`` plays ``prepare_sssp_edges``'s ``num_partitions``
-    role: ``_bucket = pmod(hash(_tile), n_buckets *
-    _BUCKET_OVERSAMPLE)`` is frozen into the stored rows, so pick it
-    for the CLUSTER the table serves, not the session writing it. The
-    oversampled domain exists because ``bucketBy`` re-hashes the
-    _bucket VALUES into its ``n_buckets`` files; at load factor 1
-    that second hash leaves ~1/e of the files empty (ADVICE r7) —
-    at 8x it leaves ~none and the per-file row counts even out.
-
-    Cross-session durability needs a PERSISTENT catalog (Hive
-    metastore / warehouse catalog — the norm on any real cluster):
-    bucket metadata lives in the catalog, and Spark's default
-    in-memory catalog drops it at session end (the parquet files
-    alone, re-read by path, scan un-bucketed). Verified end-to-end
-    across two separate processes with a derby-backed Hive catalog:
-    the second session's scan reports ``Bucketed: true`` and the
-    flood result is bit-identical (r7 session log).
-    """
-    tile_fn = tile_expr if tile_expr is not None else _default_tile
-    annotated = _annotate_sssp_edges(edges, tile_fn, n_buckets)
-    (
-        annotated.write.mode(mode)
-        .bucketBy(n_buckets, "_bucket")
-        .sortBy("_bucket")
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-    spark = edges.sparkSession
-    # stamp the _bucket formula into the table (ADVICE r8): the
-    # formula is frozen into the STORED rows, so a reader that
-    # recomputes buckets under a different oversample factor would
-    # cogroup old rows against fresh labels to zero pairs — SSSP
-    # "converges" instantly to origins-only output with no error.
-    # load_sssp_edges_bucketed verifies this stamp; tables written
-    # before the stamp existed (pre-oversampling v1 layout,
-    # _bucket = pmod(hash(_tile), n_buckets)) must be rewritten.
-    spark.sql(
-        f"ALTER TABLE {table_name} SET TBLPROPERTIES ("
-        f"'h3ron.bucket_formula_version' = '{_BUCKET_FORMULA_VERSION}', "
-        f"'h3ron.bucket_oversample' = '{_BUCKET_OVERSAMPLE}', "
-        f"'h3ron.n_buckets' = '{n_buckets}')"
-    )
-    return spark.table(table_name)
-
-
-def load_sssp_edges_bucketed(
-    spark: SparkSession,
-    table_name: str,
-    expected_n_buckets: int | None = None,
-) -> DataFrame:
-    """Load a :func:`persist_sssp_edges_bucketed` table with its
-    layout stamp verified (ADVICE r8): raises if the table predates
-    the stamp or was written under a different ``_bucket`` formula /
-    oversample factor, instead of letting a formula mismatch cogroup
-    to zero pairs and return a silently-truncated flood. (The
-    :func:`sssp_frontier` fallback path that derives ``(_tile,
-    _bucket)`` by joining the stored columns themselves is
-    formula-agnostic — the stamp protects any consumer that
-    RECOMPUTES buckets, e.g. a future seeding path keyed off
-    ``_bucket_of``.)
-
-    ``expected_n_buckets`` (ADVICE r9): a consumer that will recompute
-    buckets via ``_bucket_of(..., n_buckets)`` passes the value it
-    intends to use; a mismatch with the stored ``h3ron.n_buckets``
-    stamp raises instead of cogrouping old rows against fresh labels
-    to zero pairs. To ADOPT the stored value instead, call
-    :func:`get_sssp_bucket_count` — out-of-band on purpose (ADVICE
-    r10): an ad-hoc attribute on the DataFrame would vanish on the
-    first ``.filter``/``.select`` (every transformation returns a new
-    object) and would not survive Spark Connect.
-    """
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {table_name}").collect()
-    }
-    version = props.get("h3ron.bucket_formula_version")
-    oversample = props.get("h3ron.bucket_oversample")
-    n_buckets = props.get("h3ron.n_buckets")
-    if version != str(_BUCKET_FORMULA_VERSION) or oversample != str(
-        _BUCKET_OVERSAMPLE
-    ):
-        raise ValueError(
-            f"bucketed SSSP table {table_name!r} carries layout stamp "
-            f"(version={version}, oversample={oversample}) but this "
-            f"build expects (version={_BUCKET_FORMULA_VERSION}, "
-            f"oversample={_BUCKET_OVERSAMPLE}). The _bucket formula is "
-            "frozen into the stored rows; rewrite the table with "
-            "persist_sssp_edges_bucketed (a missing stamp means the "
-            "pre-oversampling v1 layout, which is incompatible)."
-        )
-    if expected_n_buckets is not None and n_buckets != str(expected_n_buckets):
-        raise ValueError(
-            f"bucketed SSSP table {table_name!r} was written with "
-            f"n_buckets={n_buckets} but the consumer expects "
-            f"{expected_n_buckets}; recomputing buckets under a "
-            "different modulus cogroups to zero pairs. Rewrite the "
-            "table or adopt the stored value "
-            "(get_sssp_bucket_count(spark, table_name))."
-        )
-    return spark.table(table_name)
-
-
-def get_sssp_bucket_count(spark: SparkSession, table_name: str) -> int:
-    """The ``n_buckets`` modulus a bucketed SSSP table was written
-    under (its ``h3ron.n_buckets`` TBLPROPERTY) — the value a consumer
-    passes to ``_bucket_of`` to recompute bucket labels that actually
-    cogroup with the stored rows. Raises on a pre-stamp table."""
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {table_name}").collect()
-    }
-    n_buckets = props.get("h3ron.n_buckets")
-    if n_buckets is None:
-        raise ValueError(
-            f"bucketed SSSP table {table_name!r} carries no "
-            "h3ron.n_buckets stamp (pre-stamp layout) — rewrite it "
-            "with persist_sssp_edges_bucketed"
-        )
-    return int(n_buckets)
 
 
 def _make_tile_relax(thr, track_parents, label_cols):
@@ -921,22 +749,21 @@ def sssp_frontier(
     threshold: float | None = None,
     max_iter: int = 100,
     tile_expr=None,
-    broadcast_frontier: bool = True,
     track_parents: bool = False,
 ) -> DataFrame:
     """Beyond-broadcast SSSP: block-synchronous frontier relaxation
     (the 'Pregel path' of SURVEY §7). Returns (origin, cell, weight)
     like within_weight_threshold.
 
-    Execution (default, ``broadcast_frontier=True``): the edge table
-    is partitioned ONCE by ``tile_expr(origin)`` (a spatial key — for
-    H3 graphs a coarse parent cell; hash of the node id when None),
-    sorted and cached with that layout. Each global round seeds a
-    LOCAL multi-source Dijkstra with the improved-label frontier and
-    settles every label reachable inside a tile group in one round, so
-    global rounds scale with the TILE-graph diameter, not the
-    cell-graph hop radius — the property that keeps round count flat
-    as the graph grows 100x. Seeding adapts to the frontier size:
+    Execution: the edge table is partitioned ONCE by
+    ``tile_expr(origin)`` (a spatial key — for H3 graphs a coarse
+    parent cell; hash of the node id when None), sorted and cached
+    with that layout. Each global round seeds a LOCAL multi-source
+    Dijkstra with the improved-label frontier and settles every label
+    reachable inside a tile group in one round, so global rounds scale
+    with the TILE-graph diameter, not the cell-graph hop radius — the
+    property that keeps round count flat as the graph grows 100x.
+    Seeding adapts to the frontier size:
 
     - frontier <= ``_MAX_BROADCAST_FRONTIER`` labels: the frontier
       FRAME is torrent-broadcast and attached to its cells' edge rows
@@ -959,13 +786,6 @@ def sssp_frontier(
     they number <= ``_MAX_ISIN_TILES``; beyond that a broadcast
     semi-join against the distinct active tiles prunes with no
     tile-count ceiling.
-
-    ``broadcast_frontier=False`` relaxes one hop per round with a
-    pure-DataFrame broadcast join of the frontier FRAME instead of the
-    Python tile kernel — the option when executor Python memory is the
-    constraint. The broadcast bound applies to the frontier frame (the
-    same bound ``F.broadcast(frontier)`` always implied), but there is
-    no driver-side row materialization in this mode either.
 
     Correctness: labels emitted by a tile-local Dijkstra are upper
     bounds given that round's seeds; the global min-merge keeps the
@@ -1106,62 +926,40 @@ def sssp_frontier(
                 "semi",
             )
 
-        if broadcast_frontier:
-            if n_front <= _MAX_BROADCAST_FRONTIER:
-                # fast path: torrent-broadcast the frontier FRAME and
-                # attach each seed label to its cell's edge rows via a
-                # broadcast hash join — no shuffle or sort on either
-                # side, and the kernel keeps per-PARTITION granularity
-                seeds_df = front.select(
-                    F.col("cell").alias("_u"),
-                    F.col("origin").alias("_so"),
-                    F.col("weight").alias("_sw"),
-                )
-                seeded = (
-                    e_round.select("_u", "_v", "_w")
-                    .join(F.broadcast(seeds_df), "_u", "left")
-                    # keep _so exact int64 through Arrow: nullable
-                    # longs arrive in pandas as float64, corrupting
-                    # ids above 2^53 — flag the match separately and
-                    # fill the gaps with 0
-                    .withColumn("_hit", F.col("_so").isNotNull())
-                    .withColumn("_so", F.coalesce("_so", F.lit(0)))
-                    .withColumn("_sw", F.coalesce("_sw", F.lit(0.0)))
-                )
-                relax = _make_seeded_relax(
-                    thr, track_parents, tuple(label_cols)
-                )
-                cand = seeded.mapInPandas(relax, cand_schema)
-            else:
-                # beyond-broadcast frontier: co-partitioned cogroup by
-                # bucket — the frontier shuffles, the cached edge side
-                # does not. cogroup contract: exactly (left, right);
-                # round-invariant settings ride in the closure
-                relax = _make_tile_relax(
-                    thr, track_parents, tuple(label_cols)
-                )
-                cand = (
-                    e_round.groupby("_bucket")
-                    .cogroup(front.groupby("_bucket"))
-                    .applyInPandas(relax, cand_schema)
-                )
-        else:
-            cand = (
-                F.broadcast(front)
-                .join(e_round, front["cell"] == e_round["_u"])
-                .select(
-                    front["origin"].alias("origin"),
-                    e_round["_v"].alias("cell"),
-                    (front["weight"] + e_round["_w"]).alias("weight"),
-                    *(
-                        [e_round["_u"].alias("parent")]
-                        if track_parents
-                        else []
-                    ),
-                )
+        if n_front <= _MAX_BROADCAST_FRONTIER:
+            # fast path: torrent-broadcast the frontier FRAME and attach
+            # each seed label to its cell's edge rows via a broadcast
+            # hash join — no shuffle or sort on either side, and the
+            # kernel keeps per-PARTITION granularity
+            seeds_df = front.select(
+                F.col("cell").alias("_u"),
+                F.col("origin").alias("_so"),
+                F.col("weight").alias("_sw"),
             )
-            if thr is not None:
-                cand = cand.filter(F.col("weight") <= thr)
+            seeded = (
+                e_round.select("_u", "_v", "_w")
+                .join(F.broadcast(seeds_df), "_u", "left")
+                # keep _so exact int64 through Arrow: nullable longs
+                # arrive in pandas as float64, corrupting ids above
+                # 2^53 — flag the match separately and fill the gaps
+                # with 0
+                .withColumn("_hit", F.col("_so").isNotNull())
+                .withColumn("_so", F.coalesce("_so", F.lit(0)))
+                .withColumn("_sw", F.coalesce("_sw", F.lit(0.0)))
+            )
+            relax = _make_seeded_relax(thr, track_parents, tuple(label_cols))
+            cand = seeded.mapInPandas(relax, cand_schema)
+        else:
+            # beyond-broadcast frontier: co-partitioned cogroup by
+            # bucket — the frontier shuffles, the cached edge side does
+            # not. cogroup contract: exactly (left, right);
+            # round-invariant settings ride in the closure
+            relax = _make_tile_relax(thr, track_parents, tuple(label_cols))
+            cand = (
+                e_round.groupby("_bucket")
+                .cogroup(front.groupby("_bucket"))
+                .applyInPandas(relax, cand_schema)
+            )
 
         # single-shuffle merge + frontier extraction: old labels win
         # ties via the prio field inside the min-struct (the parent

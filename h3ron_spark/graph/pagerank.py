@@ -11,25 +11,12 @@ centrality measure is the natural next ask on the same H3 edge graphs
   state, nothing collected but the node-count scalar that sizes the
   teleport constant;
 - the out-weight-annotated edge table and node frame are materialized
-  ONCE. Two modes, both bit-identical (integer arithmetic):
-  ``reuse_partitioning=False`` (default) uses ``localCheckpoint`` —
-  cheap raw-row materialization, but its LogicalRDD DROPS
-  outputPartitioning (plans as a bare ``Scan ExistingRDD``), so
-  EnsureRequirements re-shuffles the small rank frames every
-  iteration (~2 exchanges/iteration). ``reuse_partitioning=True``
-  repartitions + ``cache()``s instead: InMemoryRelation PRESERVES
-  partitioning, every per-iteration join reuses it, and the only new
-  exchange per iteration is the unavoidable contribution re-key from
-  ``src``-space to ``dst``-space (plan-pinned: 5 exchanges for 5
-  iterations, was 10). The default stays localCheckpoint because the
-  measured crossover favors it at single-node scale — rank-frame
-  shuffles of |V| rows are trivial locally while the columnar
-  InMemoryRelation encode/scan of the edge table is not (sf0.1
-  min-of-4 A/B: 2.11 s localCheckpoint vs 3.41 s cache vs 3.94 s
-  no-materialization exchange-reuse) — whereas on a 1000-executor
-  cluster with |V|-sized rank tables the per-iteration NETWORK
-  shuffle dominates and ``reuse_partitioning=True`` (or bucketing the
-  edge table by ``src``) is the right call;
+  ONCE with ``localCheckpoint``. Its scan drops the partitioning, so
+  the small rank frames re-shuffle every iteration (~2
+  exchanges/iteration), yet it is the fastest measured option at
+  single-node scale (sf0.1 min-of-4 A/B: 2.11 s localCheckpoint vs
+  3.41 s partitioning-preserving ``cache()`` vs 3.94 s
+  exchange-reuse with no materialization);
 - ALL arithmetic is 64-bit integer fixed-point (``scale`` = 1e12 by
   default): contributions are ``(pr * w) div wsum`` floor-divisions,
   damping is ``(85 * s) div 100``, teleport is an integer literal.
@@ -55,193 +42,47 @@ from pyspark.sql import functions as F
 DAMP_NUM, DAMP_DEN = 85, 100
 
 
-class PageRankRun:
-    """Explicit cache-lifecycle handle for :func:`pagerank_with_handles`.
-
-    ``ranks`` is the result frame; ``cached`` holds ONLY the
-    intermediate frames this run actually ``cache()``d (empty in the
-    default ``localCheckpoint`` mode, whose materialization is GC- not
-    unpersist-managed, and excludes catalog-backed prepared frames in
-    ``assume_prepared`` mode, where unpersist would be a no-op).
-    Usable as a context manager so long-lived sessions can't leak
-    cache registrations across repeated runs::
-
-        with pagerank_with_handles(edges, reuse_partitioning=True) as run:
-            run.ranks.write.parquet(...)
-        # cached intermediates unpersisted here
-
-    This replaces the round-6 ``result._pagerank_cached`` DataFrame
-    attribute, which silently vanished on any transformation of the
-    result (VERDICT r6: an API that can't be misused beats a
-    docstring warning).
-    """
-
-    def __init__(self, ranks: DataFrame, cached: tuple = ()):
-        self.ranks = ranks
-        self.cached = tuple(cached)
-
-    def unpersist(self) -> None:
-        for c in self.cached:
-            c.unpersist()
-
-    def __enter__(self) -> "PageRankRun":
-        return self
-
-    def __exit__(self, *exc) -> bool:
-        self.unpersist()
-        return False
-
-    def __iter__(self):
-        # allow `ranks, cached = run` tuple unpacking
-        return iter((self.ranks, self.cached))
-
-
-def _annotate_out_weights(
-    edges: DataFrame, src: str, dst: str, weight: str
-) -> DataFrame:
-    """The ``(_src, _dst, _w, _wt)`` out-weight-annotated edge frame —
-    the ONE definition shared by pagerank's inline path and
-    :func:`persist_edges_bucketed`; the bit-equality contract between
-    the prepared and inline modes depends on both using this exact
-    recipe."""
-    wsums = edges.groupBy(src).agg(F.sum(weight).alias("_wt"))
-    return edges.join(wsums, src).select(
-        F.col(src).alias("_src"),
-        F.col(dst).alias("_dst"),
-        F.col(weight).cast("long").alias("_w"),
-        F.col("_wt").cast("long").alias("_wt"),
-    )
-
-
-def persist_edges_bucketed(
-    edges: DataFrame,
-    table_name: str,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    n_buckets: int = 32,
-    mode: str = "overwrite",
-) -> DataFrame:
-    """One-time persisted layout for REPEATED PageRank runs: annotate
-    the edge table with per-src out-weight totals and write it
-    BUCKETED (and sorted) by ``_src`` — the true cluster-scale answer
-    the module docstring names. A bucketed table's scan carries its
-    hash layout from catalog metadata, so every per-iteration
-    ranks-x-edges join reads the edge side IN PLACE: zero shuffle
-    exchanges on the |E|-sized side, every iteration, every run,
-    across sessions — where the cache mode must rebuild (and spend
-    memory on) its layout per session. Plan-pinned in
-    test_plans.test_pagerank_bucketed_edges_shuffle_free.
-
-    Returns the catalog-backed frame; feed it to
-    ``pagerank(..., assume_prepared=True)``.
-
-    Cross-session durability needs a PERSISTENT catalog (Hive
-    metastore / warehouse catalog): bucket metadata lives in the
-    catalog, and Spark's default in-memory catalog drops it at
-    session end — parquet files re-read by path scan un-bucketed.
-    (Proven for the sssp sibling across two processes with a
-    derby-backed Hive catalog, r7 session log; the mechanism is
-    identical here.)
-    """
-    annotated = _annotate_out_weights(edges, src, dst, weight)
-    (
-        annotated.write.mode(mode)
-        .bucketBy(n_buckets, "_src")
-        .sortBy("_src")
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-    return edges.sparkSession.table(table_name)
-
-
-def pagerank_with_handles(
+def pagerank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
     iterations: int = 5,
     scale: int = 10**12,
-    reuse_partitioning: bool = False,
-    assume_prepared: bool = False,
-) -> PageRankRun:
-    """Fixed ``iterations`` of integer PageRank; returns a
-    :class:`PageRankRun` whose ``ranks`` frame is ``(node, pr)`` with
-    ``pr`` in units of ``1/scale`` and whose ``cached`` tuple holds
-    exactly the intermediates this run ``cache()``d (so a long-lived
-    session can unpersist them — use the context-manager form).
+) -> DataFrame:
+    """Fixed ``iterations`` of integer PageRank; returns ``(node, pr)``
+    with ``pr`` in units of ``1/scale``.
 
     ``edges`` must be pre-aggregated (one row per (src, dst)); weights
     must be positive BIGINT-safe integers with per-src totals small
     enough that ``scale * wsum`` fits in 64 bits.
-
-    ``reuse_partitioning=True`` materializes the edge/node frames with
-    ``cache()`` (partitioning-preserving) instead of
-    ``localCheckpoint`` (partitioning-dropping), halving the exchange
-    count to one per iteration — the cluster-scale mode; see the
-    module docstring for the measured local-vs-cluster crossover.
-    Results are bit-identical either way (integer fixed-point;
-    partitioning-invariance is oracle- and unit-pinned).
-
-    ``assume_prepared=True`` declares that ``edges`` is ALREADY the
-    annotated ``(_src, _dst, _w, _wt)`` frame — typically the
-    bucketed table from :func:`persist_edges_bucketed` — and uses it
-    directly with no re-annotation and no materialization: the scan's
-    own catalog layout is what the per-iteration joins reuse. Because
-    the prepared frame's column names are fixed, passing non-default
-    ``src``/``dst``/``weight`` alongside it is a contradiction and
-    raises instead of being silently ignored (ADVICE r6).
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
 
-    cached: list[DataFrame] = []
-
-    def _materialize(df: DataFrame, key: str) -> DataFrame:
-        if reuse_partitioning:
-            out = df.repartition(key).cache()
-            cached.append(out)
-            return out
-        return df.localCheckpoint()
-
-    if assume_prepared:
-        if (src, dst, weight) != ("src", "dst", "w"):
-            raise ValueError(
-                "assume_prepared=True uses the fixed (_src, _dst, _w,"
-                " _wt) columns of the prepared frame; the src/dst/"
-                f"weight arguments ({src!r}, {dst!r}, {weight!r})"
-                " would be silently ignored — drop them or annotate"
-                " the frame yourself"
-            )
-        missing = {"_src", "_dst", "_w", "_wt"} - set(edges.columns)
-        if missing:
-            raise ValueError(
-                f"assume_prepared edge frame lacks columns {sorted(missing)}"
-                " (use persist_edges_bucketed to build it)"
-            )
-        e = edges
-    else:
-        e = _materialize(
-            _annotate_out_weights(edges, src, dst, weight), "_src"
+    wsums = edges.groupBy(src).agg(F.sum(weight).alias("_wt"))
+    e = (
+        edges.join(wsums, src)
+        .select(
+            F.col(src).alias("_src"),
+            F.col(dst).alias("_dst"),
+            F.col(weight).cast("long").alias("_w"),
+            F.col("_wt").cast("long").alias("_wt"),
         )
-    # distinct() leaves nodes hash-partitioned on `node`; in the
-    # cache mode that partitioning SURVIVES materialization, so the
-    # per-iteration rank-update join needs no exchange on the
-    # nodes/ranks side (projections preserve partitioning)
-    nodes = _materialize(
+        .localCheckpoint()
+    )
+    nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
-        .distinct(),
-        "node",
+        .distinct()
+        .localCheckpoint()
     )
     # the ONLY driver-side value: |V|, needed to size the integer
     # teleport constant baked into the plan (same pattern as
     # kmeans_fit collecting its bounded model state)
     n = nodes.count()
     if n == 0:
-        return PageRankRun(
-            nodes.withColumn("pr", F.lit(0).cast("long")), cached
-        )
+        return nodes.withColumn("pr", F.lit(0).cast("long"))
     tele = (scale * (DAMP_DEN - DAMP_NUM) // DAMP_DEN) // n
     ranks = nodes.select("node", F.lit(scale // n).cast("long").alias("pr"))
     for _ in range(iterations):
@@ -257,54 +98,7 @@ def pagerank_with_handles(
                 + F.expr(f"({DAMP_NUM} * coalesce(_s, 0L)) div {DAMP_DEN}")
             ).alias("pr"),
         )
-    return PageRankRun(ranks, cached)
-
-
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    iterations: int = 5,
-    scale: int = 10**12,
-    reuse_partitioning: bool = False,
-    assume_prepared: bool = False,
-) -> DataFrame:
-    """DataFrame-returning convenience wrapper around
-    :func:`pagerank_with_handles` (same arguments and semantics).
-    One-shot callers get just the ``(node, pr)`` frame; long-lived
-    sessions running pagerank repeatedly with
-    ``reuse_partitioning=True`` should use the handle API so the
-    ``cache()``d intermediates can be unpersisted — this wrapper
-    DROPS the handles, so its reuse mode warns that the two cache
-    registrations live until LRU eviction (they cannot be released
-    eagerly: the result plan reads them every iteration)."""
-    if reuse_partitioning:
-        import warnings
-
-        # UserWarning, not ResourceWarning: CPython's default filters
-        # IGNORE ResourceWarning, so the leak notice would be
-        # invisible in exactly the long-lived production sessions it
-        # exists for (ADVICE r7)
-        warnings.warn(
-            "pagerank(reuse_partitioning=True) drops the cache"
-            " handles — the two cache()d intermediates stay"
-            " registered until LRU eviction. In long-lived sessions"
-            " use pagerank_with_handles() and unpersist via the"
-            " returned PageRankRun.",
-            UserWarning,
-            stacklevel=2,
-        )
-    return pagerank_with_handles(
-        edges,
-        src=src,
-        dst=dst,
-        weight=weight,
-        iterations=iterations,
-        scale=scale,
-        reuse_partitioning=reuse_partitioning,
-        assume_prepared=assume_prepared,
-    ).ranks
+    return ranks
 
 
 def transition_edges(

@@ -27,23 +27,6 @@ At 100 TB: the pair graph is orders of magnitude smaller than the
 corpus (it only contains duplicated docs), but it can still exceed
 driver memory — the distributed path never collects labels, and
 convergence is decided with a count() on the changed-label frame.
-
-Why NO persisted bucketed edge layout here (VERDICT r6 #8, decided
-round 7): pagerank and sssp got ``persist_*_bucketed`` because their
-edge tables are REUSED across runs and sessions (the same link graph
-ranked nightly, the same road network flooded daily) — a durable
-catalog layout amortizes. A near-dup pair graph is the opposite:
-each ingest batch DERIVES a fresh pair set from that batch's
-MinHash/SimHash candidates, labels it once, and discards it — there
-is no second run for a bucketed table to serve, so the write would
-cost a full shuffle+sort to save nothing. Within the single run, the
-per-round ``localCheckpoint`` is the measured local winner for
-|V|-sized frames (the pagerank A/B in graph/pagerank.py), and the
-label frame re-keys between src- and dst-space every round anyway
-(the one unavoidable exchange). If a workload ever labels the SAME
-persisted pair graph repeatedly, route it through
-``graph.pagerank.persist_edges_bucketed``-style preparation first —
-the pattern and plan pins exist there.
 """
 
 from __future__ import annotations

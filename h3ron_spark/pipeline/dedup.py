@@ -105,45 +105,6 @@ def _shingle_hash(s: Column, seed: int) -> Column:
     return _mix_hash(shingle_base_hash(s), seed)
 
 
-def minhash_signature(text, num_perms: int = MINHASH_PERMS) -> Column:
-    """MinHash signature: per-permutation min over shingle hashes.
-
-    array<long> of length ``num_perms``; documents with similar shingle
-    sets collide on many coordinates (classic Broder MinHash).
-    """
-    sh = shingles(text)
-
-    def _perm(k: int):
-        # NB: a plain `lambda s, k=k` has arity 2 and pyspark would
-        # bind k to the (element, index) lambda's index column.
-        return lambda s: _shingle_hash(s, k)
-
-    mins = [
-        F.array_min(F.transform(sh, _perm(k))) for k in range(num_perms)
-    ]
-    return F.array(*mins)
-
-
-def lsh_band_keys(sig: Column, bands: int = LSH_BANDS) -> Column:
-    """Split a signature into ``bands`` band keys (md5 of the band slice).
-
-    Candidate pairs are documents sharing >=1 band key — the classic
-    banding trick; the join key is the band hash, never the full pairs.
-    """
-    rows = MINHASH_PERMS // bands
-    keys = [
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.lit(str(b)),
-                *[F.element_at(sig, b * rows + r + 1).cast("string") for r in range(rows)],
-            )
-        )
-        for b in range(bands)
-    ]
-    return F.array(*keys)
-
-
 def document_features(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -174,11 +135,10 @@ def minhash_signature_df(features: DataFrame) -> DataFrame:
     explode the distinct shingle sets, hash each shingle ONCE per
     permutation, min-aggregate per document.
 
-    This is the scale shape: the column-expression variant
-    (:func:`minhash_signature`) nests the shingle computation inside
-    every permutation and Catalyst cannot common-subexpression it —
-    at corpus scale that's a combinatorial expression tree. Here work
-    is linear: |shingles| x MINHASH_PERMS hash evaluations + one
+    A column-expression form would nest the shingle computation
+    inside every permutation, which Catalyst cannot
+    common-subexpression — at corpus scale a combinatorial expression
+    tree. Here work is linear: |shingles| x MINHASH_PERMS hash evaluations + one
     shuffle; the arrays are already distinct, so no dropDuplicates.
     Returns (id, m0..m{MINHASH_PERMS-1}).
     """

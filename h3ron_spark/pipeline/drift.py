@@ -28,10 +28,6 @@ from h3ron_spark.pipeline.sketch import (
 )
 
 
-def _long(metric: str, colname: str, a, b) -> list:
-    return [metric, colname, a, b]
-
-
 def drift_report(
     df_a: DataFrame,
     df_b: DataFrame,

@@ -179,7 +179,7 @@ def simhash_fold_sql(bits: int, vote_fmt: str = "_b{b}",
 
 
 # ---------------------------------------------------------------------
-# minhash band keys (dedup._band_keys_from_sig / lsh_band_keys)
+# minhash band keys (dedup._band_keys_from_sig)
 # ---------------------------------------------------------------------
 
 def band_keys_from_cols_sql(bands: int, rows: int,

@@ -35,15 +35,6 @@ from h3ron_spark.h3core.wkt import parse_wkt
 
 _MAX_FEATURES = 1_000_000
 
-_WKB_TYPE = {
-    "point": 1,
-    "linestring": 2,
-    "polygon": 3,
-    "multipoint": 4,
-    "multilinestring": 5,
-    "multipolygon": 6,
-}
-
 
 def _wkb_coords(pts) -> bytes:
     # internal parse is (lat, lng); WKB stores x=lng, y=lat

@@ -165,52 +165,6 @@ def digest(df) -> dict:
     }
 
 
-def _pagerank_reuse_mode(spark, sf_dir):
-    """graph_pagerank with reuse_partitioning=True — the cluster-scale
-    mode; digested alongside the default so BOTH exchange budgets are
-    committed with tree-walk provenance (VERDICT r5 #3)."""
-    from pyspark.sql import functions as F
-
-    from h3ron_spark import queries_h3 as QH
-    from h3ron_spark.functions import bits as B
-    from h3ron_spark.graph.pagerank import (
-        pagerank_with_handles,
-        transition_edges,
-    )
-    from h3ron_spark.testdata import load
-
-    ev = load(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    b = 25 + (F.expr("event_id div 80") % 10)
-    d1 = F.expr("event_id div 800") % 7
-    cells = ev.select(
-        "user_id", "event_id", B.h3_build_cell(b, [d1], 1).alias("cell")
-    )
-    edges = transition_edges(
-        cells, node_col="cell", order_col="event_id", partition_col="user_id"
-    )
-    # handle API, not the pagerank() wrapper: the caches must stay
-    # registered while the digest walks the executed plan (the
-    # InMemoryTableScan leaves ARE the evidence), so unpersist is
-    # deferred to session end — but the handles make that an explicit
-    # choice instead of the wrapper's silent drop
-    run = pagerank_with_handles(
-        edges, iterations=5, scale=QH._PR_SCALE, reuse_partitioning=True
-    )
-    return (
-        run.ranks.select("node", F.col("pr").alias("pr_e12"))
-        .orderBy(F.col("pr_e12").desc(), "node")
-        .limit(20)
-    )
-
-
-# (display title, builder) digested after the registry queries —
-# variants of registered queries that exercise a non-default mode
-EXTRA = [
-    ("graph_pagerank (reuse_partitioning=True, cluster-scale mode)",
-     _pagerank_reuse_mode),
-]
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from h3ron_spark import queries as Q
@@ -240,9 +194,7 @@ def main() -> None:
         "Python node must be an Arrow-batched kernel, never row-wise).",
         "",
     ]
-    targets = [
-        (name, registry[name]) for name in QUERIES if name in registry
-    ] + EXTRA
+    targets = [(name, registry[name]) for name in QUERIES if name in registry]
     for name, fn in targets:
         df = fn(spark, sf_dir)
         d = digest(df)

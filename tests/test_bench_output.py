@@ -1,8 +1,7 @@
-"""The bench CLI's output contract: the FINAL stdout line must be a
-complete JSON that fits the driver's bounded (~2000-char) tail
-capture, no matter how many queries the suite grows to — BENCH_r04
-was lost to exactly this (81 full query names alone are 1.5k chars).
-Pure-python tests over bench.build_result / build_compact; no Spark.
+"""The bench CLI's output contract: the last stdout line is the full
+result record, one JSON object carrying the per-query timings and the
+machine-state and floor stamps that make a capture adjudicable on its
+own. Pure-python tests over bench.build_result; no Spark.
 """
 
 from __future__ import annotations
@@ -13,79 +12,32 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from bench import (  # noqa: E402
-    BENCH_QUERIES,
-    COMPACT_BUDGET,
-    COMPACT_PRIORITY,
-    build_compact,
-    build_result,
-)
+from bench import BENCH_QUERIES, build_result  # noqa: E402
 
 
-def _fake_timings(n: int) -> dict[str, float]:
-    return {
-        f"some_rather_long_query_name_{i:04d}": round(0.1 + i * 0.013, 3)
-        for i in range(n)
-    }
-
-
-def test_compact_line_fits_budget_at_any_suite_size():
-    for n in (1, 10, 81, 200, 500):
-        result = build_result(_fake_timings(n), "0.1")
-        line = json.dumps(build_compact(result), separators=(",", ":"))
-        assert len(line) <= COMPACT_BUDGET + 100, (n, len(line))
-        parsed = json.loads(line)  # complete, parseable
-        assert parsed["n_queries"] == n
-        assert parsed["value"] == result["value"]
-        assert parsed["queries_file"] == "BENCH_LAST.local.json"
-
-
-def test_compact_priority_queries_lead():
-    """B1-B6 + graph headliners must survive truncation: they come
-    first, then the most expensive rows."""
-    timings = _fake_timings(300)
-    for i, name in enumerate(COMPACT_PRIORITY):
-        timings[name] = 0.001 * (i + 1)  # cheap — would sort last
-    compact = build_compact(build_result(timings, "0.1"))
-    shown = list(compact["queries"])
-    assert shown[: len(COMPACT_PRIORITY)] == COMPACT_PRIORITY
-    # the non-priority tail is most-expensive-first
-    rest = shown[len(COMPACT_PRIORITY):]
-    vals = [timings[n] for n in rest]
-    assert vals == sorted(vals, reverse=True)
-
-
-def test_compact_includes_all_when_suite_is_small():
-    timings = _fake_timings(5)
-    compact = build_compact(build_result(timings, "0.01"))
-    assert compact["n_shown"] == 5
-    assert compact["queries"] == {k: v for k, v in timings.items()}
+def _one_line(result: dict) -> dict:
+    """The record as bench.py prints it: one JSON line that parses
+    back to the same dict."""
+    line = json.dumps(result)
+    assert "\n" not in line
+    parsed = json.loads(line)
+    assert parsed == result
+    return parsed
 
 
 def test_full_result_schema():
-    result = build_result({"q1": 1.5, "q2": 2.25}, "0.1")
+    result = _one_line(build_result({"q1": 1.5, "q2": 2.25}, "0.1"))
     assert result["metric"] == "h3ron_spark_bench_total"
     assert result["value"] == 3.75
     assert result["unit"] == "sec"
     assert result["sf"] == 0.1
+    assert result["queries"] == {"q1": 1.5, "q2": 2.25}
 
 
-def test_current_suite_compact_line_fits():
-    """The REAL suite (BENCH_QUERIES) with realistic timings must
-    produce a final line within budget — the regression BENCH_r04
-    hit."""
-    timings = {n: 1.234 for n in BENCH_QUERIES}
-    result = build_result(timings, "0.1")
-    line = json.dumps(build_compact(result), separators=(",", ":"))
-    assert len(line) <= COMPACT_BUDGET + 100
-    assert json.loads(line)["n_queries"] == len(BENCH_QUERIES)
-
-
-def test_machine_state_fields_propagate_to_compact():
+def test_machine_state_fields_in_result():
     """VERDICT r5 #4: the bench JSON self-documents machine state
     (loadavg + cold/warm) so capture-vs-capture discrepancies are
-    adjudicable from the artifact alone. The compact (tail-captured)
-    line must carry the same fields AND still fit the budget."""
+    adjudicable from the artifact alone."""
     machine = {
         "loadavg_start": [1.23, 0.98, 0.76],
         "loadavg_end": [31.5, 12.2, 5.4],
@@ -93,22 +45,18 @@ def test_machine_state_fields_propagate_to_compact():
         "cold_start": False,
     }
     timings = {n: 1.234 for n in BENCH_QUERIES}
-    result = build_result(timings, "0.1", machine=machine)
+    result = _one_line(build_result(timings, "0.1", machine=machine))
     assert result["machine"] == machine
-    compact = build_compact(result)
-    assert compact["machine"] == machine
-    line = json.dumps(compact, separators=(",", ":"))
-    assert len(line) <= COMPACT_BUDGET + 100
+    assert result["queries"] == timings
     # no-machine path unchanged (subset/scale runs, old tests)
     assert "machine" not in build_result({"q": 1.0}, "0.1")
 
 
-def test_floor_fields_propagate_to_compact():
+def test_floor_fields_in_result():
     """VERDICT r7 #4: full-suite records carry GC-fenced isolated
     floors for the B1-B6 headliners so regression detection compares
-    floor-to-floor. Both the full result and the tail-captured
-    compact line must carry them and still fit the budget; subset
-    runs (no floors) must not grow an empty key."""
+    floor-to-floor; subset runs (no floors) must not grow an empty
+    key."""
     from bench import FLOOR_QUERIES
 
     floors = {n: 1.111 for n in FLOOR_QUERIES}
@@ -119,12 +67,10 @@ def test_floor_fields_propagate_to_compact():
         "cold_start": False,
     }
     timings = {n: 1.234 for n in BENCH_QUERIES}
-    result = build_result(timings, "0.1", machine=machine, floors=floors)
+    result = _one_line(
+        build_result(timings, "0.1", machine=machine, floors=floors)
+    )
     assert result["floors"] == floors
-    compact = build_compact(result)
-    assert compact["floors"] == floors
-    line = json.dumps(compact, separators=(",", ":"))
-    assert len(line) <= COMPACT_BUDGET + 100
     # every floor query is a B workload that exists in the suite
     assert set(FLOOR_QUERIES) <= set(BENCH_QUERIES)
     # subset/scale runs pass floors={} -> key absent, schema unchanged
@@ -149,11 +95,9 @@ def test_floor_queries_cover_top10_wall_time():
     assert set(FLOOR_QUERIES) <= set(BENCH_QUERIES)
 
 
-def test_floor_load_propagates_and_budget_survives():
+def test_floor_load_in_result():
     """VERDICT r8 #2 + ADVICE r8: per-floor loadavg stamps ride in
-    both records; with 16 floors + 16 stamps the compact line must
-    still parse within the tail budget (shedding floor_load first if
-    it ever cannot)."""
+    the record beside the floors they stamp."""
     from bench import FLOOR_QUERIES
 
     floors = {n: 1.111 for n in FLOOR_QUERIES}
@@ -166,19 +110,14 @@ def test_floor_load_propagates_and_budget_survives():
         "noisy": False,
     }
     timings = {n: 1.234 for n in BENCH_QUERIES}
-    result = build_result(
-        timings, "0.1", machine=machine, floors=floors, floor_load=fload
+    result = _one_line(
+        build_result(
+            timings, "0.1", machine=machine, floors=floors, floor_load=fload
+        )
     )
+    assert result["floors"] == floors
     assert result["floor_load"] == fload
-    compact = build_compact(result)
-    line = json.dumps(compact, separators=(",", ":"))
-    assert len(line) <= COMPACT_BUDGET + 100
-    parsed = json.loads(line)
-    assert parsed["floors"] == floors
-    assert parsed["floor_load"] == fload
-    assert parsed["machine"]["noisy"] is False
-    # the queries dict still shows a useful number of rows
-    assert parsed["n_shown"] >= 10
+    assert result["machine"]["noisy"] is False
     # partial-floor path (ADVICE r8): a failed floor drops BOTH dicts'
     # entries, never leaving a stamp without a floor
     assert "floor_load" not in build_result({"q": 1.0}, "0.1", floor_load={})
@@ -186,9 +125,9 @@ def test_floor_load_propagates_and_budget_survives():
 
 def test_floor_steal_full_record_only():
     """CPU-steal stamps (the co-tenant signal self-load cannot
-    pollute): per-floor steal rides in the FULL record only; the
-    compact tail line carries the capture-wide machine.steal_pct and
-    stays within budget."""
+    pollute): per-floor steal rides in the record beside the
+    capture-wide machine.steal_pct; an empty stamp dict adds no
+    key."""
     from bench import FLOOR_QUERIES
 
     floors = {n: 1.111 for n in FLOOR_QUERIES}
@@ -203,16 +142,14 @@ def test_floor_steal_full_record_only():
         "steal_pct": 0.07,
     }
     timings = {n: 1.234 for n in BENCH_QUERIES}
-    result = build_result(
-        timings, "0.1", machine=machine, floors=floors,
-        floor_load=fload, floor_steal=fsteal,
+    result = _one_line(
+        build_result(
+            timings, "0.1", machine=machine, floors=floors,
+            floor_load=fload, floor_steal=fsteal,
+        )
     )
     assert result["floor_steal"] == fsteal
-    compact = build_compact(result)
-    assert "floor_steal" not in compact
-    assert compact["machine"]["steal_pct"] == 0.07
-    line = json.dumps(compact, separators=(",", ":"))
-    assert len(line) <= COMPACT_BUDGET + 100
+    assert result["machine"]["steal_pct"] == 0.07
     assert "floor_steal" not in build_result({"q": 1.0}, "0.1", floor_steal={})
 
 
@@ -248,12 +185,11 @@ def test_degraded_floor_reasons():
     assert degraded_floor_reasons("zz", floors, suite, steal) == []
 
 
-def test_floor_degraded_field_propagates_to_compact():
+def test_floor_degraded_field_in_result():
     """The degraded flags must be PRESENT (possibly {}) whenever
-    floors are, in both the full record and the tail-captured compact
-    line the driver keeps — an unflagged inverted floor in
-    BENCH_r{N}.json is exactly the r10 failure mode. Subset runs
-    (no floors) must not grow the key."""
+    floors are — an unflagged inverted floor in BENCH_r{N}.json is
+    exactly the r10 failure mode. Subset runs (no floors) must not
+    grow the key."""
     from bench import FLOOR_QUERIES
 
     floors = {n: 1.111 for n in FLOOR_QUERIES}
@@ -261,20 +197,17 @@ def test_floor_degraded_field_propagates_to_compact():
                 FLOOR_QUERIES[1]: ["inverted", "steal"]}
     timings = {n: 1.234 for n in BENCH_QUERIES}
     machine = {"loadavg_start": [1.0, 1.0, 1.0], "noisy": False}
-    result = build_result(
-        timings, "0.1", machine=machine, floors=floors,
-        floor_degraded=degraded,
+    result = _one_line(
+        build_result(
+            timings, "0.1", machine=machine, floors=floors,
+            floor_degraded=degraded,
+        )
     )
     assert result["floor_degraded"] == degraded
-    compact = build_compact(result)
-    assert compact["floor_degraded"] == degraded
-    line = json.dumps(compact, separators=(",", ":"))
-    assert len(line) <= COMPACT_BUDGET + 100
 
     # floors present + nothing degraded -> explicit empty dict
     clean = build_result(timings, "0.1", floors=floors)
     assert clean["floor_degraded"] == {}
-    assert build_compact(clean)["floor_degraded"] == {}
 
     # no floors (subset/scale run) -> key absent
     assert "floor_degraded" not in build_result({"q": 1.0}, "0.1")
@@ -283,69 +216,23 @@ def test_floor_degraded_field_propagates_to_compact():
     )
 
 
-def test_noisy_capture_keeps_min_query_rows():
-    """VERDICT r11 "What's wrong" #1: in the r11 driver capture the
-    16 floor_degraded entries (plus floors + floor_load + machine) ate
-    the compact budget and only THREE query rows survived — the
-    driver's PERF diff then reported 20 phantom dropped_from_bench
-    rows and a 3-query geomean. The per-query dict is the driver's
-    only perf signal; floor stamps all live elsewhere (the untracked
-    full record + the committed official artifact). Reproduce the
-    exact r11 shape and pin that the dict now keeps at least
-    COMPACT_MIN_QUERY_ROWS rows, shedding stamps as needed."""
-    from bench import COMPACT_MIN_QUERY_ROWS, FLOOR_QUERIES
-
-    timings = {n: 4.607 for n in BENCH_QUERIES}
-    floors = {n: 2.531 for n in FLOOR_QUERIES}
-    fload = {n: 10.3 for n in FLOOR_QUERIES}
-    # the r11 capture: 15/16 floors flagged, most with both reasons
-    degraded = {n: ["inverted", "steal"] for n in FLOOR_QUERIES}
-    machine = {
-        "loadavg_start": [5.05, 8.47, 7.5],
-        "loadavg_end": [9.72, 10.34, 9.31],
-        "pass_totals": [263.589, 208.376, 113.415],
-        "cold_start": True,
-        "noisy": True,
-        "steal_pct": 4.79,
-    }
-    result = build_result(
-        timings, "0.1", machine=machine, floors=floors,
-        floor_load=fload, floor_degraded=degraded,
-    )
-    compact = build_compact(result)
-    line = json.dumps(compact, separators=(",", ":"))
-    assert len(line) <= COMPACT_BUDGET + 100
-    parsed = json.loads(line)
-    assert parsed["n_shown"] >= COMPACT_MIN_QUERY_ROWS, parsed["n_shown"]
-    assert parsed["n_shown"] == len(parsed["queries"])
-    # the headline totals always survive
-    assert parsed["value"] == result["value"]
-    assert parsed["n_queries"] == len(BENCH_QUERIES)
-    # if the degraded flags had to be shed to make room, the count of
-    # bad floors must still be visible in the tail line
-    if "floor_degraded" not in parsed:
-        assert parsed["n_floor_degraded"] == len(degraded)
-
-
 def test_clean_capture_keeps_floor_stamps():
-    """The shed logic must NOT strip floor stamps when they fit: a
-    clean capture (empty degraded dict) keeps floors + floor_load and
-    still shows at least the minimum query rows."""
-    from bench import COMPACT_MIN_QUERY_ROWS, FLOOR_QUERIES
+    """A clean capture (empty degraded dict) keeps floors, floor_load
+    and the explicit empty degraded dict, with every query row."""
+    from bench import FLOOR_QUERIES
 
     timings = {n: 1.234 for n in BENCH_QUERIES}
     floors = {n: 1.111 for n in FLOOR_QUERIES}
     fload = {n: 0.4 for n in FLOOR_QUERIES}
     machine = {"loadavg_start": [0.4, 0.5, 0.6], "noisy": False,
                "steal_pct": 0.05}
-    result = build_result(
-        timings, "0.1", machine=machine, floors=floors,
-        floor_load=fload, floor_degraded={},
+    result = _one_line(
+        build_result(
+            timings, "0.1", machine=machine, floors=floors,
+            floor_load=fload, floor_degraded={},
+        )
     )
-    compact = build_compact(result)
-    assert compact["floors"] == floors
-    assert compact["floor_load"] == fload
-    assert compact["floor_degraded"] == {}
-    assert compact["n_shown"] >= COMPACT_MIN_QUERY_ROWS
-    line = json.dumps(compact, separators=(",", ":"))
-    assert len(line) <= COMPACT_BUDGET + 100
+    assert result["floors"] == floors
+    assert result["floor_load"] == fload
+    assert result["floor_degraded"] == {}
+    assert result["queries"] == timings

@@ -294,8 +294,6 @@ def test_sssp_frontier_torus_nonuniform_weights(spark):
     position-dependent weights (the subsampled stand-in for the
     5.76M-edge bench graph, graph/synthetic.py): identical reached
     sets AND costs from two origins."""
-    from pyspark.sql import functions as F
-
     from h3ron_spark.graph import algorithms as GR
     from h3ron_spark.graph.synthetic import torus_grid_graph
 
@@ -310,6 +308,28 @@ def test_sssp_frontier_torus_nonuniform_weights(spark):
     got_f = {(r.origin, r.cell, round(r.weight, 9)) for r in front}
     assert got_f == got_b
     assert len({o for o, _c, _w in got_f}) == 2
+
+
+def test_sssp_frontier_join_fallback_matches_broadcast(spark, monkeypatch):
+    """The fallback when the frontier outgrows broadcast (by-bucket
+    cogroup join of the frontier against the cached edge layout) must
+    produce the same labels as the default broadcast-join seeding and
+    as broadcast Dijkstra."""
+    from h3ron_spark.graph import algorithms as GR
+    from h3ron_spark.graph.synthetic import torus_grid_graph
+
+    def w(x, y, dx, dy):
+        return 1.0 + ((x * 3 + y * 5 + dx + dy) % 3) / 2.0
+
+    edges = torus_grid_graph(spark, 12, directions=4, weight_expr=w)
+    a = GR.sssp_frontier(edges, [0, 17], threshold=4.0).collect()
+    monkeypatch.setattr(GR, "_MAX_BROADCAST_FRONTIER", 0)
+    b = GR.sssp_frontier(edges, [0, 17], threshold=4.0).collect()
+    c = GR.within_weight_threshold(edges, [0, 17], 4.0).collect()
+    sa = {(r["origin"], r["cell"], round(r["weight"], 9)) for r in a}
+    sb = {(r["origin"], r["cell"], round(r["weight"], 9)) for r in b}
+    sc = {(r["origin"], r["cell"], round(r["weight"], 9)) for r in c}
+    assert sa == sb == sc and len(sa) > 10
 
 
 def test_sssp_frontier_distributed_paths_match(spark, monkeypatch):
@@ -448,25 +468,6 @@ def test_sssp_frontier_parent_forest_backtracks_exactly(spark):
     assert {(r["cell"], r["weight"]) for r in plain} == {
         (c, w_) for c, (w_, _p) in lab.items()
     }
-
-
-def test_sssp_frontier_join_fallback_matches_broadcast(spark):
-    """broadcast_frontier=False (pure-DataFrame one-hop join rounds —
-    the fallback when the frontier outgrows broadcast) must produce
-    the same labels as the default tile-local kernel."""
-    from h3ron_spark.graph.synthetic import torus_grid_graph
-
-    def w(x, y, dx, dy):
-        return 1.0 + ((x * 3 + y * 5 + dx + dy) % 3) / 2.0
-
-    edges = torus_grid_graph(spark, 12, directions=4, weight_expr=w)
-    a = GR.sssp_frontier(edges, [0, 17], threshold=4.0).collect()
-    b = GR.sssp_frontier(
-        edges, [0, 17], threshold=4.0, broadcast_frontier=False
-    ).collect()
-    sa = {(r["origin"], r["cell"], round(r["weight"], 9)) for r in a}
-    sb = {(r["origin"], r["cell"], round(r["weight"], 9)) for r in b}
-    assert sa == sb and len(sa) > 10
 
 
 def test_backtrack_paths_from_parent_forest(spark):
@@ -909,65 +910,6 @@ def test_pagerank_rejects_bad_iterations_and_empty_graph(spark):
         pagerank(edges, iterations=0)
     empty = spark.createDataFrame([], "src long, dst long, w long")
     assert pagerank(empty, iterations=3).count() == 0
-
-
-def test_pagerank_handle_api_tracks_only_cached_frames(spark):
-    """VERDICT r6 #4 / ADVICE r6: the handle API must (a) return an
-    empty cached tuple in the default localCheckpoint mode, (b) hold
-    exactly the two cache()d frames in reuse mode and unpersist them
-    on context exit, (c) match pagerank()'s frame bit-for-bit, and
-    (d) raise — not silently ignore — when custom src/dst/weight
-    names are combined with assume_prepared=True."""
-    from pyspark.sql import functions as F2
-
-    from h3ron_spark.graph.pagerank import pagerank, pagerank_with_handles
-
-    edges = (
-        spark.range(600)
-        .select(
-            (F2.col("id") % 29).alias("src"),
-            ((F2.col("id") * 7) % 31).alias("dst"),
-            (F2.col("id") % 5 + 1).alias("w"),
-        )
-        .groupBy("src", "dst")
-        .agg(F2.sum("w").alias("w"))
-    )
-    # (a) default mode: localCheckpoint is GC-managed, nothing cached
-    run = pagerank_with_handles(edges, iterations=3)
-    assert run.cached == ()
-    base = {r["node"]: r["pr"] for r in run.ranks.collect()}
-
-    # (b) reuse mode: exactly the edge + node frames, both cache()d,
-    # and the context manager unpersists them
-    with pagerank_with_handles(
-        edges, iterations=3, reuse_partitioning=True
-    ) as run2:
-        assert len(run2.cached) == 2
-        got = {r["node"]: r["pr"] for r in run2.ranks.collect()}
-        assert all(c.storageLevel.useMemory for c in run2.cached)
-    assert all(not c.storageLevel.useMemory for c in run2.cached)
-
-    # (c) bit-equality with the wrapper
-    assert got == base
-    assert {
-        r["node"]: r["pr"] for r in pagerank(edges, iterations=3).collect()
-    } == base
-
-    # tuple unpacking works
-    ranks, cached = pagerank_with_handles(edges, iterations=3)
-    assert cached == () and ranks.columns == ["node", "pr"]
-
-    # (d) contradictory arguments raise instead of being discarded
-    prepared = edges.select(
-        F2.col("src").alias("_src"),
-        F2.col("dst").alias("_dst"),
-        F2.col("w").alias("_w"),
-        F2.lit(10).alias("_wt"),
-    )
-    with pytest.raises(ValueError, match="silently ignored"):
-        pagerank(prepared, src="from_cell", assume_prepared=True)
-    # default names + prepared frame still fine
-    assert pagerank(prepared, iterations=1, assume_prepared=True).count() > 0
 
 
 def test_map_match_viterbi_beats_pointwise_snap(spark, path_cells):

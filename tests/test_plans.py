@@ -587,61 +587,25 @@ def test_pagerank_iteration_is_join_plus_partial_agg(spark):
     """graph_pagerank: the per-iteration contribution aggregate must
     partial-combine map-side (partial_sum before the exchange), the
     plan must stay JVM-only, and nothing may degrade to a nested-loop
-    join."""
-    plan = plan_of(spark, "graph_pagerank")
-    assert "partial_sum" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
-def test_pagerank_reuse_mode_one_exchange_per_iteration(spark):
-    """Exchange-reuse pin (VERDICT r4): in ``reuse_partitioning=True``
-    mode the cached, hash-partitioned edge/node frames must make every
-    per-iteration join reuse their partitioning, leaving exactly ONE
-    new shuffle exchange per iteration — the unavoidable contribution
-    re-key from src-space to dst-space. Counted by walking the
-    physical tree (InMemoryTableScan is a leaf; its one-time build is
-    not a per-iteration cost). Budget: 5 iterations -> <=5 re-key
-    exchanges + 1 slack, vs 10 in the default localCheckpoint mode
-    (whose LogicalRDD drops outputPartitioning). Both modes are
-    bit-identical — pinned below."""
+    join. Exchange budget, counted by walking the physical tree: the
+    localCheckpointed edge and node frames scan without partitioning,
+    so each of the 5 iterations re-keys the ranks onto ``src`` and the
+    contributions onto ``dst`` — at most 2 exchanges per iteration."""
     import os
     import sys
 
     sys.path.insert(
         0, os.path.join(os.path.dirname(__file__), "..", "scripts")
     )
-    from pyspark.sql import functions as F2
-
     from plan_report import digest
 
-    from h3ron_spark.graph.pagerank import pagerank, pagerank_with_handles
-
-    edges = spark.range(4000).select(
-        (F2.col("id") % 97).alias("src"),
-        ((F2.col("id") * 7) % 89).alias("dst"),
-        (F2.col("id") % 5 + 1).alias("w"),
-    ).groupBy("src", "dst").agg(F2.sum("w").alias("w"))
-    # handle API so the session-scoped spark fixture doesn't
-    # accumulate cache registrations across tests
-    with pagerank_with_handles(
-        edges, iterations=5, reuse_partitioning=True
-    ) as run:
-        df = run.ranks
-        d = digest(df)["nodes"]
-        assert d.get("Exchange", 0) <= 6, d
-        # the per-iteration joins must read the cached frames in place
-        assert d.get("InMemoryTableScan", 0) >= 2, d
-        # and the two modes must agree bit-for-bit
-        a = {r["node"]: r["pr"] for r in df.collect()}
-    b = {
-        r["node"]: r["pr"]
-        for r in pagerank(
-            edges, iterations=5, reuse_partitioning=False
-        ).collect()
-    }
-    assert a == b
+    plan = plan_of(spark, "graph_pagerank")
+    assert "partial_sum" in plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    d = digest(Q.queries()["graph_pagerank"](spark, SF))["nodes"]
+    assert d.get("Exchange", 0) <= 10, d
 
 
 def test_incremental_rollup_partial_aggs_both_shards(spark):
@@ -650,292 +614,6 @@ def test_incremental_rollup_partial_aggs_both_shards(spark):
     plan = plan_of(spark, "pipeline_incremental_rollup")
     assert "partial_sum" in plan and "partial_max" in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
-def test_pagerank_bucketed_edges_shuffle_free(spark, tmp_path):
-    """VERDICT r5 #8: the persisted bucketBy(_src) edge layout
-    (graph/pagerank.py persist_edges_bucketed) must make EVERY
-    per-iteration ranks-x-edges join read the edge side in place —
-    zero shuffle exchanges between the bucketed parquet scan and its
-    join, all 5 iterations (the cache mode approximates this per
-    session; the bucketed table is the durable cluster-scale layout).
-    Checked by walking the physical tree: for each sort-merge /
-    shuffled-hash join, the child subtree that contains the bucketed
-    scan (and no nested join) must contain no ShuffleExchange. Also
-    pins bit-equality with the default mode."""
-    from pyspark.sql import functions as F2
-
-    from h3ron_spark.graph.pagerank import pagerank, persist_edges_bucketed
-
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS pr_bkt LOCATION '{tmp_path}/wh'"
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        edges = spark.range(4000).select(
-            (F2.col("id") % 97).alias("src"),
-            ((F2.col("id") * 7) % 89).alias("dst"),
-            (F2.col("id") % 5 + 1).alias("w"),
-        ).groupBy("src", "dst").agg(F2.sum("w").alias("w"))
-        prepared = persist_edges_bucketed(
-            edges, "pr_bkt.edges", n_buckets=8
-        )
-        df = pagerank(prepared, iterations=5, assume_prepared=True)
-
-        import os
-        import sys
-
-        sys.path.insert(
-            0, os.path.join(os.path.dirname(__file__), "..", "scripts")
-        )
-        from plan_report import children as kids
-        from plan_report import unwrap
-
-        JOINS = ("SortMergeJoinExec", "ShuffledHashJoinExec")
-
-        def simple(p):
-            return p.getClass().getSimpleName()
-
-        def find(p, pred, acc):
-            p = unwrap(p)
-            if pred(p):
-                acc.append(p)
-            for k in kids(p):
-                find(k, pred, acc)
-            return acc
-
-        def has(p, name):
-            return bool(find(p, lambda q: simple(q) == name, []))
-
-        def is_bucketed_scan(p):
-            return simple(p) == "FileSourceScanExec" and "pr_bkt" in str(
-                p.toString()
-            )
-
-        root = df._jdf.queryExecution().executedPlan()
-        joins = find(root, lambda q: simple(q) in JOINS, [])
-        edge_side_joins = 0
-        for j in joins:
-            for child in kids(j):
-                if find(child, is_bucketed_scan, []) and not find(
-                    child, lambda q: simple(q) in JOINS, []
-                ):
-                    edge_side_joins += 1
-                    assert not has(child, "ShuffleExchangeExec"), (
-                        "shuffle on the bucketed edge side:\n"
-                        + child.toString()
-                    )
-        # all 5 per-iteration joins must have resolved their edge side
-        # to the bucketed scan
-        assert edge_side_joins >= 5, edge_side_joins
-        # layout changes must never change results
-        a = {r["node"]: r["pr"] for r in df.collect()}
-        b = {
-            r["node"]: r["pr"]
-            for r in pagerank(edges, iterations=5).collect()
-        }
-        assert a == b
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP DATABASE IF EXISTS pr_bkt CASCADE")
-
-
-def test_sssp_bucketed_edges_shuffle_free(spark, tmp_path, monkeypatch):
-    """VERDICT r6 #8: persist_sssp_edges_bucketed is the durable
-    cross-session sibling of prepare_sssp_edges' cache() layout — a
-    flood round's by-bucket cogroup must read the bucketed edge scan
-    IN PLACE: zero shuffle exchanges on the edge side of the cogroup
-    (only the frontier side may exchange). Also pins end-to-end flood
-    equality: sssp_frontier fed the catalog table (attributes gone,
-    tile mapping derived from the stored _tile column) matches the
-    inline path, down the forced beyond-broadcast cogroup route."""
-    from pyspark.sql import functions as F2
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from h3ron_spark.graph import algorithms as A
-    from h3ron_spark.graph.synthetic import torus_grid_graph
-
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS sssp_bkt LOCATION '{tmp_path}/wh'"
-    )
-    try:
-
-        def tile(o):
-            return (o / 8).cast("long")
-
-        raw = torus_grid_graph(spark, 8)
-        prepared = A.persist_sssp_edges_bucketed(
-            raw, "sssp_bkt.edges", tile, n_buckets=8
-        )
-
-        # --- plan pin: one cogroup round over the bucketed table
-        front = (
-            spark.createDataFrame(
-                [(0, 0, 0.0)], "origin long, cell long, weight double"
-            )
-            .withColumn("_tile", tile(F2.col("cell")))
-            .withColumn(
-                "_bucket", A._bucket_of(tile(F2.col("cell")), 8)
-            )
-        )
-        schema = StructType(
-            [
-                StructField("origin", LongType()),
-                StructField("cell", LongType()),
-                StructField("weight", DoubleType()),
-            ]
-        )
-        relax = A._make_tile_relax(None, False, ("origin", "cell", "weight"))
-        cand = (
-            prepared.filter(F2.col("_tile").isin([0, 1]))
-            .groupby("_bucket")
-            .cogroup(front.groupby("_bucket"))
-            .applyInPandas(relax, schema)
-        )
-        import os
-        import sys
-
-        sys.path.insert(
-            0, os.path.join(os.path.dirname(__file__), "..", "scripts")
-        )
-        from plan_report import children as kids
-        from plan_report import unwrap
-
-        def simple(p):
-            return p.getClass().getSimpleName()
-
-        def find(p, pred, acc):
-            p = unwrap(p)
-            if pred(p):
-                acc.append(p)
-            for k in kids(p):
-                find(k, pred, acc)
-            return acc
-
-        root = cand._jdf.queryExecution().executedPlan()
-        cg = find(
-            root,
-            lambda q: simple(q) == "FlatMapCoGroupsInPandasExec",
-            [],
-        )
-        assert len(cg) == 1, [simple(p) for p in find(root, lambda q: True, [])]
-        sides = list(kids(cg[0]))
-        assert len(sides) == 2
-
-        def side_has(p, name):
-            return bool(find(p, lambda q: simple(q) == name, []))
-
-        edge_sides = [
-            s for s in sides if side_has(s, "FileSourceScanExec")
-        ]
-        assert len(edge_sides) == 1
-        assert not side_has(edge_sides[0], "ShuffleExchangeExec"), (
-            "shuffle on the bucketed edge side:\n"
-            + edge_sides[0].toString()
-        )
-        # the scan itself must be the bucketed read (layout from
-        # catalog metadata, not a runtime exchange)
-        scan = find(
-            edge_sides[0],
-            lambda q: simple(q) == "FileSourceScanExec",
-            [],
-        )[0]
-        assert "Bucketed: true" in scan.toString(), scan.toString()
-
-        # --- end-to-end flood equality through the cogroup route
-        monkeypatch.setattr(A, "_MAX_BROADCAST_FRONTIER", 0)
-        got = {
-            (r["origin"], r["cell"]): r["weight"]
-            for r in A.sssp_frontier(
-                spark.table("sssp_bkt.edges"), [0], threshold=6.0
-            ).collect()
-        }
-        want = {
-            (r["origin"], r["cell"]): r["weight"]
-            for r in A.sssp_frontier(
-                raw, [0], threshold=6.0, tile_expr=tile
-            ).collect()
-        }
-        assert got == want and len(got) > 0
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS sssp_bkt CASCADE")
-
-
-def test_sssp_bucketed_layout_stamp(spark, tmp_path):
-    """ADVICE r8: the _bucket formula is frozen into the stored rows
-    of a persist_sssp_edges_bucketed table, so a formula change (like
-    r8's 8x oversampling) silently cogroups old tables to zero pairs.
-    The writer stamps (formula version, oversample, n_buckets) into
-    TBLPROPERTIES and load_sssp_edges_bucketed verifies the stamp —
-    an unstamped (pre-oversampling v1) or mismatched table raises
-    instead of flooding to origins-only output."""
-    import pytest
-
-    from h3ron_spark.graph import algorithms as A
-    from h3ron_spark.graph.synthetic import torus_grid_graph
-
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS sssp_stamp LOCATION '{tmp_path}/wh'"
-    )
-    try:
-        raw = torus_grid_graph(spark, 4)
-        A.persist_sssp_edges_bucketed(
-            raw, "sssp_stamp.edges", n_buckets=4
-        )
-        props = {
-            r["key"]: r["value"]
-            for r in spark.sql(
-                "SHOW TBLPROPERTIES sssp_stamp.edges"
-            ).collect()
-        }
-        assert props["h3ron.bucket_formula_version"] == str(
-            A._BUCKET_FORMULA_VERSION
-        )
-        assert props["h3ron.bucket_oversample"] == str(A._BUCKET_OVERSAMPLE)
-        assert props["h3ron.n_buckets"] == "4"
-        # verified load round-trips; the stored modulus comes from
-        # the out-of-band helper (ADVICE r10: a DataFrame attribute
-        # would vanish on the first transformation — every .filter/
-        # .select returns a NEW DataFrame without it)
-        df = A.load_sssp_edges_bucketed(spark, "sssp_stamp.edges")
-        assert set(df.columns) == {"_tile", "_bucket", "_u", "_v", "_w"}
-        assert A.get_sssp_bucket_count(spark, "sssp_stamp.edges") == 4
-        assert not hasattr(
-            df.filter("_w >= 0"), "h3ron_n_buckets"
-        )  # the old attribute pattern is gone for good
-        # ADVICE r9: a consumer that will RECOMPUTE buckets declares
-        # the modulus it intends to use — a mismatch with the stored
-        # h3ron.n_buckets stamp raises (same silent-zero-cogroup
-        # hazard as a formula change), a match loads
-        df = A.load_sssp_edges_bucketed(
-            spark, "sssp_stamp.edges", expected_n_buckets=4
-        )
-        with pytest.raises(ValueError, match="n_buckets=4"):
-            A.load_sssp_edges_bucketed(
-                spark, "sssp_stamp.edges", expected_n_buckets=8
-            )
-        # a v1-era table (different/missing stamp) must refuse to load
-        spark.sql(
-            "ALTER TABLE sssp_stamp.edges SET TBLPROPERTIES "
-            "('h3ron.bucket_formula_version' = '1', "
-            "'h3ron.bucket_oversample' = '1')"
-        )
-        with pytest.raises(ValueError, match="rewrite the table"):
-            A.load_sssp_edges_bucketed(spark, "sssp_stamp.edges")
-        spark.sql(
-            "ALTER TABLE sssp_stamp.edges UNSET TBLPROPERTIES "
-            "('h3ron.bucket_formula_version', 'h3ron.bucket_oversample')"
-        )
-        with pytest.raises(ValueError, match="missing stamp"):
-            A.load_sssp_edges_bucketed(spark, "sssp_stamp.edges")
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS sssp_stamp CASCADE")
 
 
 def test_trajectory_similarity_pushes_user_filter(spark):
