@@ -1971,7 +1971,6 @@ def golden_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossless. Driver-side by design: a .gpkg is one SQLite file, the
     sanctioned summarized-layer export path (module docstring);
     25 rows is the shape this sink exists for."""
-    import shutil
     import struct
     import tempfile
 
@@ -1990,14 +1989,13 @@ def golden_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(")"),
         ).alias("wkt"),
     )
-    workdir = tempfile.mkdtemp(prefix="h3ron_gpkg_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="h3ron_gpkg_", ignore_cleanup_errors=True
+    ) as workdir:
         path = f"{workdir}/nations.gpkg"
         write_gpkg(src, path, "nations", wkt_col="wkt",
                    geometry_type="POINT")
         back = read_gpkg_layer(spark, path, "nations").collect()
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
     rows = []
     for r in back:
         wkb = r["geom_wkb"]

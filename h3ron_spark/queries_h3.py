@@ -10,7 +10,8 @@ records the weaker rows-only check for those, by design.
 
 from __future__ import annotations
 
-import itertools
+import tempfile
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1356,9 +1357,6 @@ def pipeline_curated_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     that's the difference between a directory listing and a full
     corpus scan (pinned in test_plans). The result is materialized
     before the temp dir is removed."""
-    import shutil
-    import tempfile
-
     from h3ron_spark.pipeline import text as TX
     from h3ron_spark.util import local_df
 
@@ -1366,8 +1364,9 @@ def pipeline_curated_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = docs.filter(TX.token_count("text").between(35, 58)).select(
         "doc_id", "lang", "n_chars", "source"
     )
-    workdir = tempfile.mkdtemp(prefix="h3ron_curated_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="h3ron_curated_", ignore_cleanup_errors=True
+    ) as workdir:
         kept.write.partitionBy("source").mode("overwrite").parquet(
             f"{workdir}/curated"
         )
@@ -1382,8 +1381,6 @@ def pipeline_curated_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang")
         )
         pdf = back.toPandas()
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
     rows = [
         (str(r.lang), int(r.n_docs), int(r.sum_chars))
         for r in pdf.itertuples()
@@ -1810,14 +1807,27 @@ def h3_direction_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STREAM_N = 1000
 
-_STREAM_ORACLE = f"""
-  WITH src AS (
-    SELECT user_id % 16 AS entity,
-           ((1::BIGINT << 59) | (2::BIGINT << 52)
+# The synthetic resolution-2 cell the cell streams carry: base cell
+# 25 + user_id % 12, digits event_id % 7 and event_id div 7 % 7.
+_STREAM_CELL_SQL = """((1::BIGINT << 59) | (2::BIGINT << 52)
             | ((25 + user_id % 12)::BIGINT << 45)
             | ((event_id % 7)::BIGINT << 42)
             | (((event_id // 7) % 7)::BIGINT << 39)
-            | ((1::BIGINT << 39) - 1)) AS cell,
+            | ((1::BIGINT << 39) - 1))"""
+
+
+def _stream_cell() -> "F.Column":
+    """``_STREAM_CELL_SQL`` as a Spark column over ``events``."""
+    return B.h3_build_cell(
+        25 + F.col("user_id") % 12,
+        [F.col("event_id") % 7, F.expr("event_id div 7") % 7],
+        2,
+    )
+
+
+_STREAM_ORACLE = f"""
+  WITH src AS (
+    SELECT user_id % 16 AS entity, {_STREAM_CELL_SQL} AS cell,
            event_id AS ts_s
     FROM events WHERE event_id < {_STREAM_N}
   )
@@ -1829,6 +1839,87 @@ _STREAM_ORACLE = f"""
   ) WHERE prev IS NOT NULL AND prev <> cell
 """
 
+# Every stream_* query runs under one private sink name: each run's
+# memory-sink view and active-query names live on its own cloned
+# session, so concurrent runs cannot see each other's sink.
+_STREAM_SINK = "h3ron_stream_sink"
+
+
+def _stream_session(spark: SparkSession) -> SparkSession:
+    """Clone the session for one streaming run.
+
+    ``spark.newSession()`` shares the SparkContext but owns a private
+    SQLConf, so the pin below is invisible to every other query on the
+    caller's session, including queries other threads run on it
+    concurrently.
+
+    The state-store partition count is frozen from
+    ``spark.sql.shuffle.partitions`` at the checkpoint's first batch;
+    the default 200 means 200 mostly-empty stateful tasks, each paying
+    a state-store checkpoint (and for Python-kernel streams a
+    Python-worker round) per micro-batch. Fixture-scale streams pin it
+    to min(8, defaultParallelism); at real key cardinality size it to
+    the cluster like any stateful query.
+
+    The clone inherits only builder-time (SparkConf) settings, not
+    runtime ``spark.conf.set`` calls on the caller's session. A conf
+    that must reach streaming runs belongs in the builder
+    (``session.get_spark``), or must be set on the clone here.
+    """
+    ss = spark.newSession()
+    ss.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(min(8, spark.sparkContext.defaultParallelism)),
+    )
+    return ss
+
+
+def _drain_file_stream(
+    spark: SparkSession,
+    parts: Sequence[DataFrame],
+    build: Callable[[DataFrame], DataFrame],
+    output_mode: str = "append",
+) -> DataFrame:
+    """Stream ``parts`` through ``build`` and return the drained rows.
+
+    Each frame in ``parts`` becomes one parquet file, read back one
+    file per trigger, so micro-batch boundaries fall between parts.
+    ``build(stream)`` maps the file stream to the streaming frame that
+    is drained into a memory sink on a cloned session
+    (``_stream_session``). The returned sink table lives on that
+    clone: build the rest of the plan from it or its ``sparkSession``,
+    never from the caller's session. The temp dir (input files,
+    checkpoint) is removed on return; the sink holds its rows in
+    memory.
+    """
+    with tempfile.TemporaryDirectory(
+        prefix="h3ron_stream_", ignore_cleanup_errors=True
+    ) as workdir:
+        ss = _stream_session(spark)
+        for i, part in enumerate(parts):
+            part.coalesce(1).write.parquet(f"{workdir}/in/b{i}.parquet")
+        stream = (
+            ss.readStream.schema(parts[0].schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(f"{workdir}/in/*")
+        )
+        q = (
+            build(stream)
+            .writeStream.format("memory")
+            .queryName(_STREAM_SINK)
+            .outputMode(output_mode)
+            .option("checkpointLocation", f"{workdir}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError(
+                "streaming query did not drain within 300s — results "
+                "would be silently partial"
+            )
+    return ss.table(_STREAM_SINK)
+
 
 @register("stream_cell_transitions", oracle=_STREAM_ORACLE)
 def stream_cell_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1839,70 +1930,24 @@ def stream_cell_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger, so the batch boundary crosses every entity's timeline —
     the oracle is the equivalent lag() window over the same rows,
     which only matches if cross-batch state works."""
-    import shutil
-    import tempfile
-
     from h3ron_spark import streaming as ST
 
     ev = load(spark, sf_dir, "events").filter(F.col("event_id") < _STREAM_N)
-    b = 25 + F.col("user_id") % 12
-    d1 = F.col("event_id") % 7
-    d2 = F.expr("event_id div 7") % 7
     src = ev.select(
         (F.col("user_id") % 16).alias("entity"),
-        B.h3_build_cell(b, [d1, d2], 2).alias("cell"),
+        _stream_cell().alias("cell"),
         F.col("event_id").cast("timestamp").alias("ts"),
     )
-    workdir = tempfile.mkdtemp(prefix="h3ron_stream_")
-    # the state-store partition count is frozen from
-    # spark.sql.shuffle.partitions at the checkpoint's first batch; a
-    # default of 200 means 200 mostly-empty stateful tasks each paying
-    # a Python-worker round per micro-batch — pin it to the actual
-    # parallelism for this fresh checkpoint. The override lives on a
-    # CLONED session (spark.newSession(): shared SparkContext,
-    # PRIVATE SQLConf), so no other query on the caller's session can
-    # ever observe it — queries run from concurrent threads on one
-    # session see neither the pinned value nor a save/restore window
-    # (ADVICE r9; replaces the r8
-    # _STREAM_CONF_LOCK serialization, which protected stream-vs-
-    # stream runs but still exposed the override to concurrent
-    # NON-stream queries). Fixture-scale key cardinality wants few
-    # partitions; size to the cluster at real cardinality like any
-    # stateful query.
-    ss = _stream_session(spark)
-    try:
-        half = _STREAM_N // 2
-        for i, part in enumerate(
-            (
-                src.filter(F.col("ts").cast("long") < half),
-                src.filter(F.col("ts").cast("long") >= half),
-            )
-        ):
-            part.coalesce(1).write.parquet(f"{workdir}/in/b{i}.parquet")
-        stream = (
-            ss.readStream.schema("entity long, cell long, ts timestamp")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{workdir}/in/*")
-        )
-        sink = f"h3ron_transitions_{next(_STREAM_SEQ)}"
-        q = (
-            ST.cell_transitions(stream)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{workdir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not drain within 300s — results "
-                "would be silently partial"
-            )
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-    return ss.table(sink).select(
+    half = _STREAM_N // 2
+    rows = _drain_file_stream(
+        spark,
+        (
+            src.filter(F.col("ts").cast("long") < half),
+            src.filter(F.col("ts").cast("long") >= half),
+        ),
+        ST.cell_transitions,
+    )
+    return rows.select(
         "entity",
         "from_cell",
         "to_cell",
@@ -1910,63 +1955,12 @@ def stream_cell_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# memory-sink names must be unique per stream run; itertools.count's
-# __next__ is a single C-level step (atomic under the GIL), so
-# concurrent preflight threads can never mint the same sink name and
-# read each other's rows (ADVICE r8).
-_STREAM_SEQ = itertools.count(1)
-
-
-def _stream_session(spark: SparkSession) -> SparkSession:
-    """Clone the session for one streaming run (ADVICE r9).
-
-    ``spark.newSession()`` shares the SparkContext (same executors,
-    same cached RDDs) but owns a PRIVATE SQLConf, so pinning
-    ``spark.sql.shuffle.partitions`` here is invisible to every other
-    query on the caller's session, including queries that other
-    threads run on it concurrently. This replaces
-    the r8 ``_STREAM_CONF_LOCK`` save/set/restore, which serialized
-    stream-vs-stream runs but still let a concurrent NON-stream query
-    observe the override mid-run, and could deadlock if an async
-    exception landed between acquire() and its try block. No restore
-    step exists anymore — the clone is discarded after the run.
-
-    The state-store partition count is frozen from the conf at the
-    checkpoint's first batch; a default of 200 means 200 mostly-empty
-    stateful tasks each paying a state-store checkpoint (and for
-    Python-kernel streams a Python-worker round) per micro-batch.
-    Fixture-scale streams pin it to min(8, defaultParallelism); at
-    real key cardinality size it to the cluster like any stateful
-    query.
-
-    Inheritance caveat (ADVICE r10): ``newSession()`` inherits only
-    BUILDER-TIME / SparkConf settings — runtime ``spark.conf.set``
-    calls made on the caller's session (e.g. ``testdata.load``
-    defensively setting ``spark.sql.legacy.parquet.nanosAsLong``) do
-    NOT carry over to the clone. Every current stream input reads
-    with an explicit schema and the semantic confs (timeZone,
-    nanosAsLong) are set at builder time by session.get_spark and
-    conftest, so nothing depends on runtime inheritance today; a
-    future conf that must reach streaming runs belongs in the
-    builder (or must be copied onto the clone here explicitly).
-    """
-    ss = spark.newSession()
-    ss.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(8, spark.sparkContext.defaultParallelism)),
-    )
-    return ss
-
+_STREAM_WIN_N = 4000
 
 _STREAM_WIN_ORACLE = f"""
   WITH src AS (
-    SELECT ((1::BIGINT << 59) | (2::BIGINT << 52)
-            | ((25 + user_id % 12)::BIGINT << 45)
-            | ((event_id % 7)::BIGINT << 42)
-            | (((event_id // 7) % 7)::BIGINT << 39)
-            | ((1::BIGINT << 39) - 1)) AS cell,
-           event_id AS ts_s
-    FROM events WHERE event_id < {{n}}
+    SELECT {_STREAM_CELL_SQL} AS cell, event_id AS ts_s
+    FROM events WHERE event_id < {_STREAM_WIN_N}
   )
   SELECT (ts_s // 60) * 60 AS window_start_s,
          ((cell | (7::BIGINT << 39)) & {~(15 << 52)}) | (1::BIGINT << 52)
@@ -1974,73 +1968,42 @@ _STREAM_WIN_ORACLE = f"""
          count(*) AS n_events
   FROM src
   GROUP BY 1, 2
-""".format(n=4000)
+"""
 
 
 @register("stream_windowed_counts", oracle=_STREAM_WIN_ORACLE)
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked windowed streaming rollup (SURVEY §1.8 extension:
-    readStream -> watermark + window agg + bit-math parent rollup)
+    file stream -> watermark + window agg + bit-math parent rollup)
     driven end-to-end over a two-file time-split source, so windows
     span micro-batch boundaries. Complete output mode emits every
     window; the oracle is the equivalent batch GROUP BY over the same
     rows (time_bucket x res-1 parent)."""
-    import shutil
-    import tempfile
-
     from h3ron_spark import streaming as ST
 
-    n = 4000
-    ev = load(spark, sf_dir, "events").filter(F.col("event_id") < n)
-    b = 25 + F.col("user_id") % 12
-    d1 = F.col("event_id") % 7
-    d2 = F.expr("event_id div 7") % 7
+    ev = load(spark, sf_dir, "events").filter(
+        F.col("event_id") < _STREAM_WIN_N
+    )
     src = ev.select(
-        B.h3_build_cell(b, [d1, d2], 2).alias("cell"),
+        _stream_cell().alias("cell"),
         F.col("event_id").cast("timestamp").alias("ts"),
     )
-    workdir = tempfile.mkdtemp(prefix="h3ron_streamwin_")
-    # cloned session carries the shuffle-partitions pin privately
-    # (ADVICE r9) — see _stream_session
-    ss = _stream_session(spark)
-    try:
-        half = n // 2
-        for i, part in enumerate(
-            (
-                src.filter(F.col("ts").cast("long") < half),
-                src.filter(F.col("ts").cast("long") >= half),
-            )
-        ):
-            part.coalesce(1).write.parquet(f"{workdir}/in/b{i}.parquet")
-        stream = (
-            ss.readStream.schema("cell long, ts timestamp")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{workdir}/in/*")
-        )
-        sink = f"h3ron_wincounts_{next(_STREAM_SEQ)}"
-        q = (
-            ST.windowed_cell_counts(
-                stream,
-                window_duration="1 minute",
-                watermark="2 minutes",
-                parent_res=1,
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{workdir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not drain within 300s — results "
-                "would be silently partial"
-            )
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-    return ss.table(sink).select(
+    half = _STREAM_WIN_N // 2
+    rows = _drain_file_stream(
+        spark,
+        (
+            src.filter(F.col("ts").cast("long") < half),
+            src.filter(F.col("ts").cast("long") >= half),
+        ),
+        lambda stream: ST.windowed_cell_counts(
+            stream,
+            window_duration="1 minute",
+            watermark="2 minutes",
+            parent_res=1,
+        ),
+        output_mode="complete",
+    )
+    return rows.select(
         F.unix_timestamp("window_start").alias("window_start_s"),
         "cell",
         "n_events",
@@ -2085,9 +2048,6 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter-event gap is <= 30 s — an event landing exactly on the
     window end merges, pinned empirically; session end = last event
     + 30 s)."""
-    import shutil
-    import tempfile
-
     from h3ron_spark import streaming as ST
 
     n = 4000
@@ -2095,51 +2055,24 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = ev.select(
         "user_id", F.col("event_id").cast("timestamp").alias("ts")
     )
-    workdir = tempfile.mkdtemp(prefix="h3ron_streamsess_")
-    # cloned session carries the shuffle-partitions pin privately
-    # (ADVICE r9) — see _stream_session
-    ss = _stream_session(spark)
-    try:
-        half = n // 2
-        sentinel = spark.range(1).select(
-            F.lit(-1).cast("long").alias("user_id"),
-            F.lit(n + 1_000_000).cast("timestamp").alias("ts"),
-        )
-        parts = (
+    half = n // 2
+    sentinel = spark.range(1).select(
+        F.lit(-1).cast("long").alias("user_id"),
+        F.lit(n + 1_000_000).cast("timestamp").alias("ts"),
+    )
+    rows = _drain_file_stream(
+        spark,
+        (
             src.filter(F.col("ts").cast("long") < half),
             src.filter(F.col("ts").cast("long") >= half),
             sentinel,
-        )
-        for i, part in enumerate(parts):
-            part.coalesce(1).write.parquet(f"{workdir}/in/b{i}.parquet")
-        stream = (
-            ss.readStream.schema("user_id long, ts timestamp")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{workdir}/in/*")
-        )
-        sink = f"h3ron_sessions_{next(_STREAM_SEQ)}"
-        q = (
-            ST.session_windows(
-                stream, gap="30 seconds", watermark="2 minutes"
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{workdir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not drain within 300s — results "
-                "would be silently partial"
-            )
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        ),
+        lambda stream: ST.session_windows(
+            stream, gap="30 seconds", watermark="2 minutes"
+        ),
+    )
     return (
-        ss.table(sink)
-        .filter(F.col("user_id") >= 0)
+        rows.filter(F.col("user_id") >= 0)
         .select(
             "user_id",
             F.unix_timestamp("session_start").alias("session_start_s"),
@@ -3177,9 +3110,6 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     second copy. The oracle is the equivalent batch DISTINCT; the
     surviving hash set is identical whichever copy wins, so the check
     is order-robust."""
-    import shutil
-    import tempfile
-
     from h3ron_spark import streaming as ST
 
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
@@ -3198,47 +3128,17 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    workdir = tempfile.mkdtemp(prefix="h3ron_streamdedup_")
-    # cloned session carries the shuffle-partitions pin privately
-    # (ADVICE r9) — see _stream_session
-    ss = _stream_session(spark)
-    try:
-        for i, part in enumerate(
-            (
-                src.filter(F.col("doc_id") < 200),
-                src.filter(F.col("doc_id") >= 200),
-            )
-        ):
-            part.coalesce(1).write.parquet(f"{workdir}/in/b{i}.parquet")
-        stream = (
-            ss.readStream.schema(
-                "doc_id long, ts timestamp, content_hash string"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{workdir}/in/*")
-        )
-        sink = f"h3ron_streamdedup_{next(_STREAM_SEQ)}"
-        q = (
-            ST.dedup_stream(
-                stream, ["content_hash"], ts_col="ts", watermark="10 minutes"
-            )
-            .select("content_hash")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{workdir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not drain within 300s — results "
-                "would be silently partial"
-            )
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-    return ss.table(sink).select("content_hash").orderBy("content_hash")
+    rows = _drain_file_stream(
+        spark,
+        (
+            src.filter(F.col("doc_id") < 200),
+            src.filter(F.col("doc_id") >= 200),
+        ),
+        lambda stream: ST.dedup_stream(
+            stream, ["content_hash"], ts_col="ts", watermark="10 minutes"
+        ).select("content_hash"),
+    )
+    return rows.orderBy("content_hash")
 
 
 _REPETITION_ORACLE = """
@@ -4066,8 +3966,8 @@ _STREAM_JOIN_ORACLE = f"""
 
 @register("stream_interval_join", oracle=_STREAM_JOIN_ORACLE)
 def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked STREAM-STREAM interval join (the Spark feature the
-    other four streaming queries don't touch): even events are leads,
+    """Watermarked STREAM-STREAM interval join (the Spark feature no
+    other stream_* query touches): even events are leads,
     odd events follows, joined per user where the follow lands within
     180 s of the lead. Both sides carry 60 s watermarks, so Spark can
     evict join state whose match window has passed — the property
@@ -4076,9 +3976,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch boundary: the batch oracle only matches if
     cross-batch buffered-join state works. Synthetic event-time
     (event_id seconds) per the established stream-query convention."""
-    import shutil
-    import tempfile
-
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_id") < _STREAM_JOIN_N
     )
@@ -4090,26 +3987,8 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # greater comparison) — the only event-time the offset avoids
         (F.col("event_id") + 86_400).cast("timestamp").alias("ts"),
     )
-    workdir = tempfile.mkdtemp(prefix="h3ron_stream_join_")
-    # cloned session carries the shuffle-partitions pin privately
-    # (ADVICE r9) — see _stream_session
-    ss = _stream_session(spark)
-    try:
-        half = _STREAM_JOIN_N // 2
-        for i, part in enumerate(
-            (
-                src.filter(F.col("event_id") < half),
-                src.filter(F.col("event_id") >= half),
-            )
-        ):
-            part.coalesce(1).write.parquet(f"{workdir}/in/b{i}.parquet")
-        stream = (
-            ss.readStream.schema(
-                "event_id long, user_id long, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{workdir}/in/*")
-        )
+
+    def join(stream: DataFrame) -> DataFrame:
         leads = (
             stream.filter(F.col("event_id") % 2 == 0)
             .withWatermark("ts", "60 seconds")
@@ -4128,32 +4007,24 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("ts").alias("r_ts"),
             )
         )
-        joined = leads.join(
+        return leads.join(
             follows,
             (F.col("l_user") == F.col("r_user"))
             & (F.col("r_ts") >= F.col("l_ts"))
             & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 180 SECONDS")),
         )
-        sink = f"h3ron_interval_join_{next(_STREAM_SEQ)}"
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{workdir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming query did not drain within 300s — results "
-                "would be silently partial"
-            )
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+
+    half = _STREAM_JOIN_N // 2
+    rows = _drain_file_stream(
+        spark,
+        (
+            src.filter(F.col("event_id") < half),
+            src.filter(F.col("event_id") >= half),
+        ),
+        join,
+    )
     return (
-        ss.table(sink)
-        .select(
+        rows.select(
             F.col("l_user").alias("user_id"),
             "lead_id",
             "follow_id",
@@ -4711,8 +4582,8 @@ def _stream_hll_oracle() -> str:
 
 @register("stream_hll_distinct", oracle=_stream_hll_oracle())
 def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming HLL driven end-to-end (applyInPandasWithState,
-    sixth streaming surface): per-event-type distinct-user registers
+    """Streaming HLL driven end-to-end (applyInPandasWithState over
+    monoid sketch state): per-event-type distinct-user registers
     accumulate across three micro-batches (event_id % 3 file splits —
     every key's values span every batch, so the state genuinely
     carries). The design rule this query certifies: MONOID state
@@ -4722,69 +4593,33 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle pins the streamed result bit-for-bit. The Python kernel
     replicates the md5/bit-math hash exactly; finalization reuses the
     batch hll_estimate, keeping one float path for both engines."""
-    import shutil
-    import tempfile
-
     from h3ron_spark.pipeline import sketch as SK
     from h3ron_spark.streaming.sketches import hll_stream
 
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id"
     )
-    workdir = tempfile.mkdtemp(prefix="h3ron_streamhll_")
-    # cloned session carries the shuffle-partitions pin privately
-    # (ADVICE r9) — see _stream_session. One state-store instance per
-    # shuffle partition, checkpointed every micro-batch: with a
-    # handful of keys, 8 partitions cuts the per-batch state-store +
-    # Python-worker overhead ~4x vs defaultParallelism.
-    ss = _stream_session(spark)
-    try:
-        for i in range(3):
-            ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.parquet(
-                f"{workdir}/in/b{i}.parquet"
-            )
-        stream = (
-            ss.readStream.schema(
-                "event_id long, event_type string, user_id long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{workdir}/in/*")
-        )
-        sink = f"h3ron_streamhll_{next(_STREAM_SEQ)}"
-        q = (
-            hll_stream(stream, "user_id", "event_type", p=8)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{workdir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("stream_hll_distinct did not drain")
-        regs = (
-            ss.table(sink)
-            .groupBy(F.col("key").alias("event_type"), "_reg")
-            .agg(F.max("_M").alias("_M"))
-        )
-        est = SK.hll_estimate(regs, ["event_type"], p=8)
-        # exact side rebuilt ON the clone: a plan may not mix
-        # DataFrames from two sessions
-        exact = (
-            load(ss, sf_dir, "events")
-            .groupBy("event_type")
-            .agg(F.countDistinct("user_id").alias("n_exact"))
-        )
-        out = (
-            exact.join(est, "event_type")
-            .select("event_type", "n_exact", "hll_est", "regs_used")
-            .orderBy("event_type")
-        )
-        out = out.localCheckpoint()  # detach from the temp files
-        return out
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+    rows = _drain_file_stream(
+        spark,
+        [ev.filter(F.col("event_id") % 3 == i) for i in range(3)],
+        lambda stream: hll_stream(stream, "user_id", "event_type", p=8),
+    )
+    regs = rows.groupBy(F.col("key").alias("event_type"), "_reg").agg(
+        F.max("_M").alias("_M")
+    )
+    est = SK.hll_estimate(regs, ["event_type"], p=8)
+    # exact side built on the sink's session: a plan may not mix
+    # DataFrames from two sessions
+    exact = (
+        load(rows.sparkSession, sf_dir, "events")
+        .groupBy("event_type")
+        .agg(F.countDistinct("user_id").alias("n_exact"))
+    )
+    return (
+        exact.join(est, "event_type")
+        .select("event_type", "n_exact", "hll_est", "regs_used")
+        .orderBy("event_type")
+    )
 
 
 def _zorder_oracle() -> str:
@@ -4825,9 +4660,6 @@ def rel_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the interleave term-by-term (layout.zorder_sql,
     shared builder) on the raw table — layout must not change query
     semantics, only I/O."""
-    import shutil
-    import tempfile
-
     from h3ron_spark.operators.layout import write_zordered
 
     ev = load(spark, sf_dir, "events").select(
@@ -4836,8 +4668,9 @@ def rel_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     qx = (F.col("user_id") % 256).cast("long")
     qy = (F.floor(F.col("value")).cast("long") % 256).cast("long")
     src = ev.withColumn("_qx", qx).withColumn("_qy", qy)
-    workdir = tempfile.mkdtemp(prefix="h3ron_zorder_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="h3ron_zorder_", ignore_cleanup_errors=True
+    ) as workdir:
         write_zordered(src, f"{workdir}/t", ["_qx", "_qy"], bits=8)
         back = spark.read.parquet(f"{workdir}/t")
         out = (
@@ -4852,8 +4685,6 @@ def rel_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_type")
         )
         return out.localCheckpoint()  # detach from the temp files
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 _MM_AVI_DECODE_ORACLE_TMPL = """

@@ -1005,8 +1005,9 @@ def test_stream_queries_thread_safe_under_parallel_replay(spark):
     must not (a) leak their shuffle-partitions pin to any other query
     (each streaming run now executes on a PRIVATE cloned session —
     queries_h3._stream_session — so the caller's session conf is
-    never written at all), (b) collide on memory-sink names
-    (_STREAM_SEQ is an atomic itertools.count), or (c) leave the
+    never written at all), (b) read each other's memory sink (all
+    runs share one sink name, whose view and active-query check live
+    on each run's own clone), or (c) leave the
     caller's session conf changed afterwards. Runs two different
     stateful stream queries concurrently twice and checks results
     match their sequential runs and the caller conf is untouched."""
@@ -1055,3 +1056,43 @@ def test_stream_session_conf_isolated_from_caller(spark):
     ss.conf.set("spark.sql.session.timeZone", "UTC+03:00")
     assert spark.conf.get("spark.sql.session.timeZone") != "UTC+03:00"
     assert spark.conf.get(conf_key) == before
+
+
+@pytest.mark.parametrize("fail", [False, True])
+def test_drain_file_stream_removes_temp_dir(spark, tmp_path, monkeypatch, fail):
+    """The file-stream driver removes its temp dir (input files and
+    checkpoint) after a normal return and when ``build`` raises; the
+    returned sink table lives in memory, so it still collects after
+    the dir is gone."""
+    import tempfile
+
+    import h3ron_spark.queries_h3 as QH
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def ours():
+        return [p for p in tmp_path.iterdir() if p.name.startswith("h3ron_stream_")]
+
+    seen = []
+
+    def build(stream):
+        seen.append(ours())
+        if fail:
+            raise ValueError("build failed")
+        return stream
+
+    parts = [
+        spark.range(lo, lo + 3).select(
+            "id", F.col("id").cast("timestamp").alias("ts")
+        )
+        for lo in (0, 3)
+    ]
+    if fail:
+        with pytest.raises(ValueError, match="build failed"):
+            QH._drain_file_stream(spark, parts, build)
+    else:
+        rows = QH._drain_file_stream(spark, parts, build)
+    assert len(seen) == 1 and len(seen[0]) == 1  # the dir existed in build
+    assert ours() == []
+    if not fail:
+        assert sorted(r.id for r in rows.collect()) == list(range(6))
